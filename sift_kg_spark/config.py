@@ -118,8 +118,8 @@ class DedupConfig:
     # BENCH/SKEW.md: ~1 s per 1M-member bucket). True: two-level
     # pre-salted count (operators/lsh.sized_buckets) — map-side-combined
     # partials, no single-task bucket scan, one extra key-table exchange.
-    # Flip it when the metrics table's bucket_size_histogram shows
-    # buckets past ~10^7 members. Pair output is bit-identical either way
+    # Flip it when lsh.bucket_size_histogram, run on the key table,
+    # shows buckets past ~10^7 members. Pair output is bit-identical either way
     # (pinned by tests + the SKEW.md checksum column).
     salted_sizing: bool = False
 

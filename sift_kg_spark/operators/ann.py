@@ -395,8 +395,8 @@ def semantic_dedup(
     single-cluster scoping misses), so candidate volume is
     sum(cell_size^2) bounded by the ``cell_cap`` hash-threshold guard,
     not N^2. The cosine filter is JVM higher-order functions; the
-    component step is the same hash-partitioned min-label propagation
-    the text path uses (operators/components).
+    component step is the same connected components the text path uses
+    (operators/components).
     """
     from sift_kg_spark.operators.components import connected_components
 

@@ -69,7 +69,6 @@ def sized_buckets(
     id_col: str,
     salted: bool = False,
     salt_fanout: int = 32,
-    pin: bool = False,
 ) -> DataFrame:
     """Append ``bucket_size`` / ``bucket_rep`` per key; keep collision
     buckets only. Two physically different plans, bit-identical output:
@@ -86,19 +85,17 @@ def sized_buckets(
       re-aggregated per key (tiny: one row per colliding key) and
       hash-joined back onto the key exchange. Costs one extra exchange
       of the key table (the join side) — worth it only when the
-      bucket-size histogram (``bucket_size_histogram``, written to the
-      metrics table) shows buckets far past the SKEW.md envelope
-      (~10^7+ members: a boilerplate fingerprint shared by a whole
-      crawl). Enable via ``DedupConfig.salted_sizing``.
+      bucket-size histogram (``bucket_size_histogram``, computed on
+      demand; no run records it) shows buckets far past the SKEW.md
+      envelope (~10^7+ members: a boilerplate fingerprint shared by a
+      whole crawl). Enable via ``DedupConfig.salted_sizing``.
 
-    ``pin=True`` persists the sized table (MEMORY_AND_DISK) before it is
-    returned — for callers whose downstream consumes it more than twice
-    or whose upstream is not otherwise protected. The default stays
-    False: the pairing joins in this module instead keep both sides on
-    ONE key exchange (merge-hinted, see ``candidate_pairs``), where
-    ReusedExchange makes the duplicate subtree free and a 28M-row cache
-    materialization would cost more than the duplicated window it saves
-    (measured on the sf1.0 candidates stage: pin 17.3 s vs reuse 12.5 s).
+    The sized table is not persisted: the pairing joins in this module
+    keep both sides on ONE key exchange (merge-hinted, see
+    ``candidate_pairs``), where ReusedExchange makes the duplicate
+    subtree free and a 28M-row cache materialization would cost more
+    than the duplicated window it saves (measured on the sf1.0
+    candidates stage: persisted 17.3 s vs reuse 12.5 s).
     """
     if not salted:
         w = Window.partitionBy(*key_cols)
@@ -121,10 +118,6 @@ def sized_buckets(
             .filter(F.col("bucket_size") > 1)
         )
         sized = rows.join(sizes, on=key_cols, how="inner")
-    if pin:
-        from pyspark import StorageLevel
-
-        sized = sized.persist(StorageLevel.MEMORY_AND_DISK)
     return sized
 
 
@@ -315,8 +308,8 @@ def candidate_pairs_incremental(keys: DataFrame, cfg: DedupConfig) -> DataFrame:
 
 
 def bucket_size_histogram(keys: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Skew diagnostic for the metrics table: bucket-size distribution per
-    channel (log2 buckets)."""
+    """Skew diagnostic, computed on demand (no run records it):
+    bucket-size distribution per channel (log2 buckets)."""
     key_cols = ["lang", "key"] if cfg.partition_by_lang else ["key"]
     return (
         keys.groupBy(*key_cols)

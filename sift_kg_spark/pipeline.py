@@ -386,33 +386,6 @@ def rekey_uid_collisions(prepared: DataFrame) -> DataFrame:
     )
 
 
-def split_quarantine(
-    docs: DataFrame, cfg: DedupConfig
-) -> tuple[DataFrame, DataFrame]:
-    """Back-compat helper over prepare_stage output semantics (used by
-    tests and ad-hoc callers that start from prepare_docs output)."""
-    is_bad = (
-        F.col("text").isNull()
-        | (F.length(F.trim(F.col("text"))) < cfg.min_text_chars)
-        | (F.length("text_norm") < F.lit(max(1, cfg.min_text_chars // 2)))
-    )
-    good = docs.filter(~is_bad).select(
-        "url",
-        "lang",
-        "text_norm",
-        "n_chars",
-        F.sha2(F.col("text_norm"), 256).alias("sha"),
-    )
-    quarantine = docs.filter(is_bad).select(
-        "url",
-        "lang",
-        F.when(F.col("text").isNull(), "extraction_failed")
-        .otherwise("near_empty")
-        .alias("reason"),
-    )
-    return good, quarantine
-
-
 def run_dedup(
     spark: SparkSession,
     pages: DataFrame,

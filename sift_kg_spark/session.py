@@ -49,6 +49,27 @@ def _local_scratch_dir() -> str:
         return "/tmp"
 
 
+# Default driver heap: today's 24g where the host has room for it, else
+# ~60% of physical memory, so the JVM, its Python workers and the OS page
+# cache still fit on a small host.
+_DRIVER_MEM_CAP_MB = 24 * 1024
+_DRIVER_MEM_SHARE = 0.6
+
+
+def _default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory`` when neither the caller nor
+    $SPARK_GRAFT_DRIVER_MEM sets it: min(24g, 60% of MemTotal)."""
+    try:
+        with open(meminfo) as fh:
+            total_kb = next(
+                int(line.split()[1]) for line in fh if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "24g"
+    mb = int(total_kb * _DRIVER_MEM_SHARE) // 1024
+    return "24g" if mb >= _DRIVER_MEM_CAP_MB else f"{mb}m"
+
+
 def get_spark(
     app_name: str = "sift_kg_spark",
     cores: int | None = None,
@@ -78,6 +99,11 @@ def get_spark(
         except ValueError:
             n_shuffle = cores or 32
 
+    heap = (
+        driver_memory
+        or os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+        or _default_driver_memory()
+    )
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.session.timeZone", "UTC")
@@ -95,7 +121,7 @@ def get_spark(
         # page faults are expensive on memory-ballooned hosts); measured
         # ~2.5x faster feature extraction at 32 workers vs 2048-row batches.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
-        .config("spark.driver.memory", driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", heap)
         # SPARK_GRAFT_PRETOUCH=1 adds -Xms=heap -XX:+AlwaysPreTouch:
         # fault the whole heap in ONCE at JVM startup. On lazily-backed
         # (ballooned/overcommitted) hosts, first-touch faults are the
@@ -112,8 +138,7 @@ def get_spark(
                 "SPARK_GRAFT_JAVA_OPTS",
                 "-XX:+UseG1GC"
                 + (
-                    " -XX:+AlwaysPreTouch -Xms"
-                    + (driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+                    " -XX:+AlwaysPreTouch -Xms" + heap
                     if os.environ.get("SPARK_GRAFT_PRETOUCH")
                     else ""
                 ),

@@ -15,10 +15,10 @@ format-neutral seam — swapping ``df.write.parquet`` for
 ``df.writeTo(...).createOrReplace()`` against a real Iceberg catalog is a
 config-level change, and nothing upstream moves.
 
-Per-partition metrics (north-rule requirement): after each commit the
-written table is scanned once and row counts per physical partition are
-appended to ``_metrics``; stage wall time, row counts, and input lineage go
-to ``_lineage``.
+Per-partition metrics (north-rule requirement): after each commit the row
+count of every written file is read from its Parquet footer and appended to
+``_metrics``; stage wall time, row counts, and input lineage go to
+``_lineage``. A commit runs one Spark job: the write.
 """
 
 from __future__ import annotations
@@ -127,7 +127,12 @@ class StageStore:
         if repartition_by:
             writer = df.repartition(F.col(repartition_by))
         writer.write.mode("overwrite").parquet(path)
-        committed = self.spark.read.parquet(path)
+        # The written schema is known: reading it back with it skips the
+        # footer-inference job. Spark reads a file source's given schema as
+        # nullable, as Parquet stores it, so the manifest schema (and every
+        # fingerprint of workdirs committed with an inferred read-back)
+        # stays byte-equal.
+        committed = self.spark.read.schema(df.schema).parquet(path)
 
         # Per-partition metrics from the parquet FOOTERS (one written file
         # per partition): O(partitions) driver-side footer reads, zero

@@ -88,3 +88,55 @@ class TestStaleInputInvalidation:
         # recommitting B against the new A heals the chain
         store2.write("b", store2.read("a").selectExpr("x * 2 AS y"), inputs=("a",))
         assert store2.exists("b")
+
+
+class TestInferredReadBackWorkdir:
+    def test_workdir_committed_with_inferred_schema_resumes(
+        self, spark, cfg, tmp_path, monkeypatch
+    ):
+        """StageStore used to read each committed table back with a schema
+        inferred from its Parquet footers. It now reads it back with the
+        written schema made nullable, which records the same manifest
+        schema byte for byte, so a workdir committed the old way resumes
+        without rebuilding any stage."""
+        import json
+
+        from pyspark.sql import DataFrameReader
+
+        from sift_kg_spark.tableio import StageStore
+
+        pages_pdf, *_ = generate_corpus(120, seed=9)
+        pages = spark.createDataFrame(pages_pdf.drop(columns=["true_text"]))
+
+        def schemas(wd: str) -> dict[str, str]:
+            mdir = os.path.join(wd, "_manifests")
+            out = {}
+            for name in os.listdir(mdir):
+                with open(os.path.join(mdir, name)) as fh:
+                    out[name] = json.load(fh)["schema"]
+            return out
+
+        legacy_wd = str(tmp_path / "inferred")
+        with monkeypatch.context() as m:
+            # the old read-back: the reader gets no schema and infers one
+            m.setattr(DataFrameReader, "schema", lambda self, schema: self)
+            expected = _assignments_sorted(
+                run_dedup(spark, pages, cfg, workdir=legacy_wd)
+            )
+        fresh_wd = str(tmp_path / "known")
+        run_dedup(spark, pages, cfg, workdir=fresh_wd)
+        legacy = schemas(legacy_wd)
+        assert len(legacy) >= 10
+        assert schemas(fresh_wd) == legacy
+
+        rebuilt = []
+        write = StageStore.write
+
+        def recording_write(self, name, *args, **kwargs):
+            rebuilt.append(name)
+            return write(self, name, *args, **kwargs)
+
+        monkeypatch.setattr(StageStore, "write", recording_write)
+        resumed = run_dedup(spark, pages.limit(0), cfg, workdir=legacy_wd)
+        assert _assignments_sorted(resumed) == expected
+        assert rebuilt == []

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from sift_kg_spark.config import DedupConfig
+from sift_kg_spark.operators import components
 from sift_kg_spark.operators.components import connected_components
 from sift_kg_spark.operators.exact import exact_dup_pairs, exact_representatives
 from sift_kg_spark.operators.lsh import candidate_pairs
@@ -106,9 +107,50 @@ class TestCandidatePairs:
         assert got == {(5, 6, "simchunk")}
 
 
+def _union_find(pairs) -> dict[str, str]:
+    """Reference labels: every node -> the smallest url of its component."""
+    parent: dict[str, str] = {}
+
+    def find(x: str) -> str:
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
 class TestConnectedComponents:
     def _edges(self, spark, pairs):
         return spark.createDataFrame(pairs, "url_a string, url_b string")
+
+    def _both_paths(self, spark, monkeypatch, pairs, **kwargs):
+        """Labels from the driver-local finish and from star contraction
+        (forced by a zero edge budget). Each call must leave the session
+        as it found it: the shuffle-partition conf unchanged, and no
+        persisted RDD left behind except the one checkpoint that backs
+        the star path's result."""
+        edges = self._edges(spark, pairs)
+        jsc = spark.sparkContext._jsc
+        conf = spark.conf.get("spark.sql.shuffle.partitions")
+        out = {}
+        for path, kept in (("local", 0), ("star", 1)):
+            with monkeypatch.context() as m:
+                if path == "star":
+                    m.setattr(components, "_local_edge_budget", lambda _s: 0)
+                before = set(jsc.getPersistentRDDs().keySet())
+                out[path] = {
+                    r.url: r.cluster_id
+                    for r in connected_components(edges, **kwargs).collect()
+                }
+                new = set(jsc.getPersistentRDDs().keySet()) - before
+            assert len(new) <= kept, (path, new)
+            assert spark.conf.get("spark.sql.shuffle.partitions") == conf
+        return out
 
     def test_two_clusters_bridge_and_singleton(self, spark):
         # mirror of test_communities.py:8-38: two dense clusters + bridge
@@ -135,14 +177,15 @@ class TestConnectedComponents:
         labels = {r.url: r.cluster_id for r in connected_components(edges).collect()}
         assert set(labels.values()) == {"a"}
 
-    def test_star(self, spark):
-        edges = self._edges(spark, [(f"m{i}", "hub") for i in range(10)])
-        labels = {r.url: r.cluster_id for r in connected_components(edges).collect()}
-        assert len(set(labels.values())) == 1
+    def test_star(self, spark, monkeypatch):
+        pairs = [(f"m{i}", "hub") for i in range(10)]
+        got = self._both_paths(spark, monkeypatch, pairs)
+        assert got["local"] == got["star"] == _union_find(pairs)
+        assert set(got["local"].values()) == {"hub"}
 
-    def test_star_contraction_parity_random(self, spark):
-        """Kiveris large-star/small-star must agree with min-label
-        propagation on a random multi-component graph."""
+    def test_star_contraction_parity_random(self, spark, monkeypatch):
+        """Both paths agree with union-find on a random multi-component
+        graph."""
         import random
 
         rng = random.Random(7)
@@ -151,30 +194,38 @@ class TestConnectedComponents:
             for _ in range(90)
         ]
         pairs = [(a, b) for a, b in pairs if a != b]
-        edges = self._edges(spark, pairs)
-        ref = {r.url: r.cluster_id
-               for r in connected_components(edges, algorithm="label").collect()}
-        got = {r.url: r.cluster_id
-               for r in connected_components(edges, algorithm="star").collect()}
-        assert got == ref
+        got = self._both_paths(spark, monkeypatch, pairs)
+        assert got["local"] == got["star"] == _union_find(pairs)
 
-    def test_star_contraction_long_chain(self, spark):
+    def test_star_contraction_long_chain(self, spark, monkeypatch):
         """A 200-node chain: diameter 199 >> log2(200). Star contraction
         must converge well inside the iteration cap (where propagation
-        would need ~200 rounds), and auto mode must fall back to it."""
+        would need ~200 rounds); the local finish needs no cap."""
         n = 200
         pairs = [(f"c{i:04d}", f"c{i + 1:04d}") for i in range(n - 1)]
-        edges = self._edges(spark, pairs)
-        got = {r.url: r.cluster_id
-               for r in connected_components(
-                   edges, max_iterations=25, algorithm="star").collect()}
-        assert set(got.values()) == {"c0000"}
-        assert len(got) == n
-        auto = {r.url: r.cluster_id
-                for r in connected_components(
-                    edges, max_iterations=25, algorithm="auto",
-                    auto_switch_rounds=5).collect()}
-        assert auto == got
+        got = self._both_paths(spark, monkeypatch, pairs, max_iterations=25)
+        assert got["local"] == got["star"] == _union_find(pairs)
+        assert set(got["star"].values()) == {"c0000"}
+        assert len(got["star"]) == n
+
+    def test_non_ascii_urls(self, spark, monkeypatch):
+        """The local path orders urls with Arrow's sort, the star path
+        with Spark's string order: both must pick the same min url."""
+        pairs = [
+            ("https://é.example/ä", "https://z.example/"),
+            ("https://z.example/", "https://日本.example/"),
+            ("https://Ω.org/", "https://ω.org/"),
+            ("https://ω.org/", "https://a.org/\U0001F600"),
+            ("https://ü.de/", "https://u.de/"),
+        ]
+        got = self._both_paths(spark, monkeypatch, pairs)
+        assert got["local"] == got["star"] == _union_find(pairs)
+        assert got["local"]["https://日本.example/"] == "https://z.example/"
+
+    def test_no_edges(self, spark):
+        out = connected_components(self._edges(spark, []))
+        assert out.columns == ["url", "cluster_id"]
+        assert out.collect() == []
 
 
 class TestVerifyThresholds:
