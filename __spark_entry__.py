@@ -86,6 +86,48 @@ def _chain_edges(d: DataFrame, mod: int, keep: int) -> DataFrame:
     )
 
 
+def _incremental_vs_full(
+    spark: SparkSession, base_pages: DataFrame, batch: DataFrame, cfg, prefix: str
+) -> tuple[DataFrame, DataFrame]:
+    """Commit a base run over ``base_pages``, append ``batch`` to it, and
+    run the full pipeline over base ∪ batch. Returns the incremental
+    COMBINED assignments (url, i_cl, i_ca, i_sz) and a one-row
+    ``_any_bad`` flag: 1 when any url's (cluster_id, canonical_url,
+    cluster_size) differs between the two, or is missing from either."""
+    import tempfile
+
+    from sift_kg_spark.incremental import run_dedup_incremental
+    from sift_kg_spark.pipeline import run_dedup
+
+    base_wd = tempfile.mkdtemp(prefix=prefix)
+    run_dedup(spark, base_pages, cfg, workdir=base_wd)
+    inc = run_dedup_incremental(spark, batch, cfg, base_workdir=base_wd)
+    full = run_dedup(spark, base_pages.unionByName(batch), cfg)
+
+    fa = full.assignments.select(
+        "url",
+        F.col("cluster_id").alias("f_cl"),
+        F.col("canonical_url").alias("f_ca"),
+        F.col("cluster_size").alias("f_sz"),
+    )
+    ia = inc.assignments.select(
+        "url",
+        F.col("cluster_id").alias("i_cl"),
+        F.col("canonical_url").alias("i_ca"),
+        F.col("cluster_size").alias("i_sz"),
+    )
+    j = fa.join(ia, "url", "full_outer")
+    bad = (
+        F.col("f_cl").isNull()
+        | F.col("i_cl").isNull()
+        | (F.col("f_cl") != F.col("i_cl"))
+        | (F.col("f_ca") != F.col("i_ca"))
+        | (F.col("f_sz") != F.col("i_sz"))
+    )
+    global_bad = j.select(F.max(F.when(bad, 1).otherwise(0)).alias("_any_bad"))
+    return ia, global_bad
+
+
 # ---------------------------------------------------------------------------
 # entry
 # ---------------------------------------------------------------------------
@@ -1354,11 +1396,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # COMBINED assignments equal a full run over base ∪ batch row for
         # row (cluster_id, canonical_url, cluster_size); (2) each planted
         # original co-clusters with its copy in the incremental result.
-        import tempfile
-
         from sift_kg_spark.config import DedupConfig
-        from sift_kg_spark.incremental import run_dedup_incremental
-        from sift_kg_spark.pipeline import run_dedup
 
         cfg = DedupConfig(min_text_chars=10)
         base_pages = _docs_as_pages(spark, sf)
@@ -1390,33 +1428,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         batch = copies.unionByName(near)
 
-        base_wd = tempfile.mkdtemp(prefix="skg_incq_base_")
-        run_dedup(spark, base_pages, cfg, workdir=base_wd)
-        inc = run_dedup_incremental(spark, batch, cfg, base_workdir=base_wd)
-        full = run_dedup(spark, base_pages.unionByName(batch), cfg)
-
-        fa = full.assignments.select(
-            "url",
-            F.col("cluster_id").alias("f_cl"),
-            F.col("canonical_url").alias("f_ca"),
-            F.col("cluster_size").alias("f_sz"),
-        )
-        ia = inc.assignments.select(
-            "url",
-            F.col("cluster_id").alias("i_cl"),
-            F.col("canonical_url").alias("i_ca"),
-            F.col("cluster_size").alias("i_sz"),
-        )
-        j = fa.join(ia, "url", "full_outer")
-        bad = (
-            F.col("f_cl").isNull()
-            | F.col("i_cl").isNull()
-            | (F.col("f_cl") != F.col("i_cl"))
-            | (F.col("f_ca") != F.col("i_ca"))
-            | (F.col("f_sz") != F.col("i_sz"))
-        )
-        global_bad = j.select(
-            F.max(F.when(bad, 1).otherwise(0)).alias("_any_bad")
+        ia, global_bad = _incremental_vs_full(
+            spark, base_pages, batch, cfg, "skg_incq_base_"
         )
         pl = planted.select(
             "doc_id",
@@ -1450,11 +1463,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # capture's rows must vanish and its cluster repair). Invariant:
         # the incremental COMBINED assignments equal a full capture-mode
         # run over every raw capture, row for row.
-        import tempfile
-
         from sift_kg_spark.config import DedupConfig
-        from sift_kg_spark.incremental import run_dedup_incremental
-        from sift_kg_spark.pipeline import run_dedup
 
         cfg = DedupConfig(min_text_chars=10, capture_dedup=True)
         base_pages = _docs_as_pages(spark, sf)
@@ -1485,33 +1494,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.col("lang"),
         )
 
-        base_wd = tempfile.mkdtemp(prefix="skg_capq_base_")
-        run_dedup(spark, base_pages, cfg, workdir=base_wd)
-        inc = run_dedup_incremental(spark, batch, cfg, base_workdir=base_wd)
-        full = run_dedup(spark, base_pages.unionByName(batch), cfg)
-
-        fa = full.assignments.select(
-            "url",
-            F.col("cluster_id").alias("f_cl"),
-            F.col("canonical_url").alias("f_ca"),
-            F.col("cluster_size").alias("f_sz"),
-        )
-        ia = inc.assignments.select(
-            "url",
-            F.col("cluster_id").alias("i_cl"),
-            F.col("canonical_url").alias("i_ca"),
-            F.col("cluster_size").alias("i_sz"),
-        )
-        j = fa.join(ia, "url", "full_outer")
-        bad = (
-            F.col("f_cl").isNull()
-            | F.col("i_cl").isNull()
-            | (F.col("f_cl") != F.col("i_cl"))
-            | (F.col("f_ca") != F.col("i_ca"))
-            | (F.col("f_sz") != F.col("i_sz"))
-        )
-        global_bad = j.select(
-            F.max(F.when(bad, 1).otherwise(0)).alias("_any_bad")
+        ia, global_bad = _incremental_vs_full(
+            spark, base_pages, batch, cfg, "skg_capq_base_"
         )
         # per planted doc: its url must carry the RE-CRAWLED assignment
         # (present in the incremental result at all)
@@ -1543,11 +1527,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # is the planted one, and the natural corpus's own span cleaning
         # is identical in base and full runs. Invariant: the incremental
         # COMBINED assignments equal a full span-mode run, row for row.
-        import tempfile
-
         from sift_kg_spark.config import DedupConfig
-        from sift_kg_spark.incremental import run_dedup_incremental
-        from sift_kg_spark.pipeline import run_dedup
 
         cfg = DedupConfig(
             min_text_chars=10,
@@ -1605,30 +1585,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             [("span://batch/1", bp + " " + fill("nfill", 8))]
         ).unionByName(fam_b)
 
-        base_wd = tempfile.mkdtemp(prefix="skg_spanq_base_")
-        run_dedup(spark, base_pages, cfg, workdir=base_wd)
-        inc = run_dedup_incremental(spark, batch, cfg, base_workdir=base_wd)
-        full = run_dedup(spark, base_pages.unionByName(batch), cfg)
-
-        fa = full.assignments.select(
-            "url",
-            F.col("cluster_id").alias("f_cl"),
-            F.col("canonical_url").alias("f_ca"),
-            F.col("cluster_size").alias("f_sz"),
-        )
-        ia = inc.assignments.select(
-            "url",
-            F.col("cluster_id").alias("i_cl"),
-            F.col("canonical_url").alias("i_ca"),
-            F.col("cluster_size").alias("i_sz"),
-        )
-        j = fa.join(ia, "url", "full_outer")
-        bad = (
-            F.col("f_cl").isNull()
-            | F.col("i_cl").isNull()
-            | (F.col("f_cl") != F.col("i_cl"))
-            | (F.col("f_ca") != F.col("i_ca"))
-            | (F.col("f_sz") != F.col("i_sz"))
+        ia, global_bad = _incremental_vs_full(
+            spark, base_pages, batch, cfg, "skg_spanq_base_"
         )
         # global flags: no row mismatch, and the crossing actually split
         # the glue-only carrier cluster in the incremental result
@@ -1637,9 +1595,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ).agg(
             (F.countDistinct("i_cl") == 2).cast("int").alias("_split_ok")
         )
-        global_bad = j.select(
-            F.max(F.when(bad, 1).otherwise(0)).alias("_any_bad")
-        ).crossJoin(F.broadcast(carrier_cl))
+        global_bad = global_bad.crossJoin(F.broadcast(carrier_cl))
         # per planted doc: its base family-"a" co-clusters with the
         # batch family-"b" near-dup
         pl = planted.select(

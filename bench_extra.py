@@ -2,10 +2,11 @@
 
 Three sub-commands:
 
-  stages  — per-stage wall clock of the dedup pipeline over the webtext
-            corpus (same corpus/config as bench.py's headline), each stage
-            forced through the noop sink so the computation is timed, not
-            the sink, and labelled via setJobDescription.
+  stages  — per-stage wall clock of ``run_dedup`` over the webtext corpus
+            (same corpus/config as bench.py's headline), committed to a
+            temporary workdir. A stage's time is its ``elapsed_sec`` in the
+            store's lineage table: build + commit, since the build is lazy
+            and runs inside the commit's write. TOTAL is the whole call.
   queries — noop-sink wall clock of selected declared queries over the
             driver testdata tables (same clearCache discipline as
             bench.py), best-of-N.
@@ -25,6 +26,7 @@ from __future__ import annotations
 import json
 import os
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -52,170 +54,22 @@ def cmd_stages(sf_dir: str) -> None:
     corpus_dir = ensure_corpus(sf, repo_root)
     spark = _spark(sf)
 
-    from pyspark import StorageLevel
-    from pyspark.sql import functions as F
-
     from sift_kg_spark import DedupConfig
-    from sift_kg_spark.operators.exact import (
-        exact_dup_pairs,
-        exact_representatives,
-    )
-    from sift_kg_spark.operators.lsh import candidate_pairs, explode_keys
-    from sift_kg_spark.operators.suffix import confirm_spans
-    from sift_kg_spark.operators.verify import verify_pairs
-    from sift_kg_spark.pipeline import (
-        PAIR_COLUMNS,
-        prepare_stage,
-    )
-    from sift_kg_spark.functions.features import make_features_udf
-    from sift_kg_spark.operators.components import connected_components
+    from sift_kg_spark.pipeline import run_dedup
 
-    cfg = DedupConfig()
     pages = spark.read.parquet(os.path.join(corpus_dir, "pages.parquet"))
     pages.count()  # warm scan
-
-    n_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    timings: dict[str, float] = {}
-
-    def stage(name, build, persist=True):
-        spark.sparkContext.setJobDescription(f"r6-stage: {name}")
+    with tempfile.TemporaryDirectory(prefix="bench_extra_stages_") as wd:
         t0 = time.monotonic()
-        df = build()
-        if persist:
-            df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        _noop(df)
-        timings[name] = round(time.monotonic() - t0, 2)
-        spark.sparkContext.setJobDescription(None)
-        print(f"  {name}: {timings[name]} s", file=sys.stderr)
-        return df
-
-    t_all0 = time.monotonic()
-    prepared = stage(
-        "prepare", lambda: prepare_stage(pages, cfg, n_partitions)
-    )
-    docs = prepared.filter(F.col("reason").isNull()).drop("reason")
-    exact_pairs = stage("exact_pairs", lambda: exact_dup_pairs(docs, cfg))
-    udf = make_features_udf(cfg)
-
-    def build_features():
-        reps = exact_representatives(docs, cfg)
-        return reps.select(
-            "doc_uid", "url", "lang", "n_chars",
-            udf(F.col("text_norm")).alias("f"),
-        ).select(
-            "doc_uid", "url", "lang", "n_chars",
-            "f.n_tokens", "f.shingles", "f.simhash", "f.keys",
-        )
-
-    features = stage("features", build_features)
-    candidates = stage(
-        "candidates", lambda: candidate_pairs(explode_keys(features, cfg), cfg)
-    )
-    verified = stage("verified", lambda: verify_pairs(candidates, features, cfg))
-
-    def build_spans():
-        flagged = verified.filter(F.col("status") == "flagged").select(
-            "uid_a", "uid_b"
-        )
-        texts = docs.select("doc_uid", "text_norm")
-        flagged_texts = (
-            flagged.join(
-                texts.select(
-                    F.col("doc_uid").alias("uid_a"),
-                    F.col("text_norm").alias("text_a"),
-                ),
-                "uid_a",
-            ).join(
-                texts.select(
-                    F.col("doc_uid").alias("uid_b"),
-                    F.col("text_norm").alias("text_b"),
-                ),
-                "uid_b",
-            )
-        ).select("uid_a", "uid_b", "text_a", "text_b")
-        return confirm_spans(flagged_texts.repartition(n_partitions), cfg)
-
-    spans = stage("spans", build_spans)
-
-    def build_pairs():
-        scored = verified.join(spans, ["uid_a", "uid_b"], "left")
-        span_confirm = (F.col("status") == "flagged") & (
-            F.col("span") >= cfg.min_span_bytes
-        )
-        upgraded = scored.withColumn(
-            "decided_by",
-            F.when(span_confirm, F.lit("suffix")).otherwise(F.col("decided_by")),
-        ).withColumn(
-            "status",
-            F.when(span_confirm, F.lit("confirmed")).otherwise(F.col("status")),
-        )
-        urls = docs.select("doc_uid", "url")
-        named = (
-            upgraded.join(
-                urls.select(
-                    F.col("doc_uid").alias("uid_a"), F.col("url").alias("_ua")
-                ),
-                "uid_a",
-            )
-            .join(
-                urls.select(
-                    F.col("doc_uid").alias("uid_b"), F.col("url").alias("_ub")
-                ),
-                "uid_b",
-            )
-            .withColumn("url_a", F.least("_ua", "_ub"))
-            .withColumn("url_b", F.greatest("_ua", "_ub"))
-        )
-        exact = (
-            exact_pairs.withColumn("n_keys", F.lit(None).cast("bigint"))
-            .withColumn("hamming", F.lit(0))
-            .withColumn("span", F.lit(None).cast("int"))
-            .withColumn("status", F.lit("confirmed"))
-            .withColumn("decided_by", F.lit("exact"))
-        )
-        return exact.select(*PAIR_COLUMNS).unionByName(
-            named.select(*PAIR_COLUMNS)
-        )
-
-    dup_pairs = stage("dup_pairs", build_pairs)
-
-    def build_assignments():
-        # same shape as pipeline.run_dedup's build_assignments (agg-based
-        # canonical pick) so this stage times what the pipeline runs
-        edges = dup_pairs.filter(F.col("status") == "confirmed").select(
-            "url_a", "url_b"
-        )
-        cc = connected_components(edges, cfg.max_cc_iterations)
-        assigned = docs.select("url", "n_chars").join(cc, "url", "left")
-        assigned = assigned.withColumn(
-            "cluster_id", F.coalesce(F.col("cluster_id"), F.col("url"))
-        )
-        canon = assigned.groupBy("cluster_id").agg(
-            F.min(
-                F.struct(
-                    (-F.col("n_chars")).alias("_neg_chars"), F.col("url")
-                )
-            ).alias("_best"),
-            F.count("*").alias("cluster_size"),
-        ).select(
-            "cluster_id",
-            F.col("_best.url").alias("canonical_url"),
-            "cluster_size",
-        )
-        return assigned.join(canon, "cluster_id").select(
-            "url", "cluster_id", "canonical_url", "cluster_size"
-        )
-
-    assignments = stage("assignments", build_assignments)
-    stage(
-        "clusters",
-        lambda: assignments.groupBy("cluster_id").agg(
-            F.count("*").alias("size"),
-            F.min("canonical_url").alias("canonical_url"),
-        ),
-        persist=False,
-    )
-    timings["TOTAL"] = round(time.monotonic() - t_all0, 2)
+        store = run_dedup(spark, pages, DedupConfig(), workdir=wd).store
+        total = round(time.monotonic() - t0, 2)
+        timings = {
+            r.stage: round(r.elapsed_sec, 2)
+            for r in store.lineage().orderBy("committed_at").collect()
+        }
+    for name, sec in timings.items():
+        print(f"  {name}: {sec} s", file=sys.stderr)
+    timings["TOTAL"] = total
     print(json.dumps({"mode": "stages", "sf": sf, "timings": timings}))
     spark.stop()
 

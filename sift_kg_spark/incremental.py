@@ -84,27 +84,37 @@ from __future__ import annotations
 
 from dataclasses import replace
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sift_kg_spark.config import DEFAULT_CONFIG, DedupConfig
-from sift_kg_spark.functions.features import (
-    FEATURE_BASE_DTYPES,
-    make_features_udf,
-)
+from sift_kg_spark.functions.features import FEATURE_BASE_DTYPES
 from sift_kg_spark.operators.components import connected_components
-from sift_kg_spark.operators.exact import exact_dup_pairs
+from sift_kg_spark.operators.exact import exact_dup_pairs, exact_representatives
 from sift_kg_spark.operators.lsh import candidate_pairs_incremental, explode_keys
-from sift_kg_spark.operators.suffix import confirm_spans
 from sift_kg_spark.operators.verify import verify_pairs
 from sift_kg_spark.pipeline import (
     PAIR_COLUMNS,
     DedupResult,
+    cluster_table,
+    featurize,
     prepare_docs,
     prepare_stage,
     run_context,
+    scored_pairs,
+    span_scores,
+    with_canonical,
 )
 from sift_kg_spark.tableio import StageStore
+
+
+def _pair_uids(pairs: DataFrame) -> DataFrame:
+    """The distinct ``doc_uid``s named by ``pairs(uid_a, uid_b)``."""
+    return (
+        pairs.select(F.col("uid_a").alias("doc_uid"))
+        .unionByName(pairs.select(F.col("uid_b").alias("doc_uid")))
+        .distinct()
+    )
 
 
 def check_base_features_schema(base_features: DataFrame) -> None:
@@ -569,8 +579,6 @@ def run_dedup_incremental(
         # the group's min surviving url (what a full run would pick), its
         # signature recomputed from the identical text — one UDF call per
         # such group, bounded by the tombstone count.
-        features_udf_rh = make_features_udf(cfg)
-
         def build_features_rehomed() -> DataFrame:
             dead_rep_uids = base_features.select("doc_uid").join(
                 F.broadcast(tomb_uids), "doc_uid", "leftsemi"
@@ -586,13 +594,7 @@ def run_dedup_incremental(
             reps = base_prepared.filter(F.col("reason").isNull()).join(
                 F.broadcast(rehome_groups), [*group_cols, "url"], "inner"
             )
-            return reps.select(
-                "doc_uid", "url", "lang", "n_chars",
-                features_udf_rh(F.col("text_norm")).alias("f"),
-            ).select(
-                "doc_uid", "url", "lang", "n_chars",
-                "f.n_tokens", "f.shingles", "f.simhash", "f.keys",
-            )
+            return featurize(reps, cfg)
 
         features_rehomed = commit(
             "features_rehomed", build_features_rehomed, ("tombstones",)
@@ -698,8 +700,6 @@ def run_dedup_incremental(
     exact_pairs = commit("exact_pairs", build_exact, ("prepared",))
 
     # ---- 3. signatures for genuinely new texts only ------------------------
-    features_udf = make_features_udf(cfg)
-
     def build_features() -> DataFrame:
         # One representative per NEW distinct sha — "seen in base" means a
         # NON-quarantined base row carries it: a sha whose only base
@@ -718,18 +718,7 @@ def run_dedup_incremental(
         new_only = docs.join(
             F.broadcast(base_sha_hits), on=group_cols, how="leftanti"
         )
-        reps = (
-            new_only.groupBy(*group_cols)
-            .agg(F.min_by(F.struct(*new_only.columns), F.col("url")).alias("_r"))
-            .select("_r.*")
-        )
-        return reps.select(
-            "doc_uid", "url", "lang", "n_chars",
-            features_udf(F.col("text_norm")).alias("f"),
-        ).select(
-            "doc_uid", "url", "lang", "n_chars",
-            "f.n_tokens", "f.shingles", "f.simhash", "f.keys",
-        )
+        return featurize(exact_representatives(new_only, cfg), cfg)
 
     features = commit("features", build_features, ("prepared",))
 
@@ -750,13 +739,8 @@ def run_dedup_incremental(
     feat_cols = ["doc_uid", "shingles", "simhash"]
 
     def build_verified() -> DataFrame:
-        cand_uids = (
-            candidates.select(F.col("uid_a").alias("doc_uid"))
-            .unionByName(candidates.select(F.col("uid_b").alias("doc_uid")))
-            .distinct()
-        )
         base_needed = base_features.select(*feat_cols).join(
-            F.broadcast(cand_uids), "doc_uid", "leftsemi"
+            F.broadcast(_pair_uids(candidates)), "doc_uid", "leftsemi"
         )
         features_all = features.select(*feat_cols).unionByName(base_needed)
         return verify_pairs(candidates, features_all, cfg)
@@ -766,85 +750,22 @@ def run_dedup_incremental(
     )
 
     def build_spans() -> DataFrame:
-        flagged = verified.filter(F.col("status") == "flagged").select(
-            "uid_a", "uid_b"
-        )
-        f_uids = (
-            flagged.select(F.col("uid_a").alias("doc_uid"))
-            .unionByName(flagged.select(F.col("uid_b").alias("doc_uid")))
-            .distinct()
-        )
+        flagged = verified.filter(F.col("status") == "flagged")
         base_texts = base_docs.select("doc_uid", "text_norm").join(
-            F.broadcast(f_uids), "doc_uid", "leftsemi"
+            F.broadcast(_pair_uids(flagged)), "doc_uid", "leftsemi"
         )
-        texts_all = docs.select("doc_uid", "text_norm").unionByName(base_texts)
-        flagged_texts = (
-            flagged.join(
-                texts_all.select(
-                    F.col("doc_uid").alias("uid_a"),
-                    F.col("text_norm").alias("text_a"),
-                ),
-                "uid_a",
-            ).join(
-                texts_all.select(
-                    F.col("doc_uid").alias("uid_b"),
-                    F.col("text_norm").alias("text_b"),
-                ),
-                "uid_b",
-            )
-        ).select("uid_a", "uid_b", "text_a", "text_b")
-        return confirm_spans(flagged_texts.repartition(n_partitions), cfg)
+        texts = docs.select("doc_uid", "text_norm").unionByName(base_texts)
+        return span_scores(verified, texts, cfg, n_partitions)
 
     spans = commit("spans", build_spans, ("verified", "prepared"))
 
     # ---- 6. new evidence table (url-named) ---------------------------------
     def build_pairs() -> DataFrame:
-        scored = verified.join(spans, ["uid_a", "uid_b"], "left")
-        span_confirm = (F.col("status") == "flagged") & (
-            F.col("span") >= cfg.min_span_bytes
-        )
-        upgraded = scored.withColumn(
-            "decided_by",
-            F.when(span_confirm, F.lit("suffix")).otherwise(F.col("decided_by")),
-        ).withColumn(
-            "status",
-            F.when(span_confirm, F.lit("confirmed")).otherwise(F.col("status")),
-        )
-        v_uids = (
-            verified.select(F.col("uid_a").alias("doc_uid"))
-            .unionByName(verified.select(F.col("uid_b").alias("doc_uid")))
-            .distinct()
-        )
         base_urls = base_prepared.select("doc_uid", "url").join(
-            F.broadcast(v_uids), "doc_uid", "leftsemi"
+            F.broadcast(_pair_uids(verified)), "doc_uid", "leftsemi"
         )
-        urls_all = docs.select("doc_uid", "url").unionByName(base_urls)
-        named = (
-            upgraded.join(
-                urls_all.select(
-                    F.col("doc_uid").alias("uid_a"), F.col("url").alias("_ua")
-                ),
-                "uid_a",
-            )
-            .join(
-                urls_all.select(
-                    F.col("doc_uid").alias("uid_b"), F.col("url").alias("_ub")
-                ),
-                "uid_b",
-            )
-            .withColumn("url_a", F.least("_ua", "_ub"))
-            .withColumn("url_b", F.greatest("_ua", "_ub"))
-        )
-        exact = (
-            exact_pairs.withColumn("n_keys", F.lit(None).cast("bigint"))
-            .withColumn("hamming", F.lit(0))
-            .withColumn("span", F.lit(None).cast("int"))
-            .withColumn("status", F.lit("confirmed"))
-            .withColumn("decided_by", F.lit("exact"))
-        )
-        out = exact.select(*PAIR_COLUMNS).unionByName(
-            named.select(*PAIR_COLUMNS)
-        )
+        urls = docs.select("doc_uid", "url").unionByName(base_urls)
+        out = scored_pairs(verified, spans, exact_pairs, urls, cfg)
         if rewrite_map is not None:
             # Re-attribute stored evidence that named a dead doc
             # (superseded capture or span re-clean):
@@ -1066,18 +987,7 @@ def run_dedup_incremental(
                 )
             )
             affected = affected.unionByName(dead_rows)
-        w = Window.partitionBy("cluster_id").orderBy(
-            F.desc("n_chars"), F.asc("url")
-        )
-        wsize = Window.partitionBy("cluster_id")
-        out = (
-            affected.withColumn("canonical_url", F.first("url").over(w))
-            .withColumn("cluster_size", F.count("*").over(wsize))
-            .select(
-                "url", "cluster_id", "canonical_url", "cluster_size",
-                "prev_cluster_id",
-            )
-        )
+        out = with_canonical(affected)
         if tombstones is not None:
             prev_hits = base_assign.join(
                 F.broadcast(tombstones.select("url")), "url", "leftsemi"
@@ -1133,16 +1043,12 @@ def run_dedup_incremental(
     else:
         assignments = build_assignments().localCheckpoint(eager=False)
 
-    def build_clusters() -> DataFrame:
-        return assignments.groupBy("cluster_id").agg(
-            F.count("*").alias("size"),
-            F.min("canonical_url").alias("canonical_url"),
-        )
-
     if materialize_assignments:
-        clusters = commit("clusters", build_clusters, ("assignments",))
+        clusters = commit(
+            "clusters", lambda: cluster_table(assignments), ("assignments",)
+        )
     else:
-        clusters = build_clusters().localCheckpoint(eager=False)
+        clusters = cluster_table(assignments).localCheckpoint(eager=False)
 
     return DedupResult(
         docs=docs,

@@ -5,9 +5,9 @@ auto-approve / auto-reject confidence thresholds, leaving the middle zone
 as DRAFT for review (/root/reference/src/sift_kg/resolve/reviewer.py:39-77,
 resolve/models.py:12-41). Our deterministic equivalents:
 
-  score 1: exact Jaccard over the k-shingle hash sets of the pair
-           (vectorized pandas UDF: one lexsort + bincount per Arrow batch
-           over the sorted-unique int32 arrays both docs already carry);
+  score 1: exact Jaccard over the k-shingle hash sets of the pair —
+           JVM-side, ``size(array_intersect)`` over the duplicate-free
+           int32 arrays both docs already carry, no Python;
   score 2: SimHash64 Hamming distance — JVM-side, just
            ``bit_count(simhash_a ^ simhash_b)``, no Python;
   score 3: longest shared byte span (suffix-array stage, operators/suffix) —
@@ -28,57 +28,10 @@ joined back onto the (small) verified table by the pipeline.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from sift_kg_spark.config import DedupConfig
-
-
-@F.pandas_udf(T.DoubleType())
-def jaccard_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Exact Jaccard of two sorted-unique int64 arrays per row.
-
-    Vectorized over the whole Arrow batch (same reduceat-style pattern as
-    hashing.minhash_signatures): both ragged columns are concatenated into
-    ONE value array tagged with a pair id, a single lexsort groups equal
-    values within each pair, and — because each side is duplicate-free —
-    every adjacent equal value inside a pair is exactly one intersection
-    hit, counted per pair with one bincount. No per-row Python loop.
-    """
-    n = len(a)
-    if n == 0:
-        return pd.Series(np.empty(0, dtype=np.float64))
-    arrs: list[np.ndarray] = []
-    len_a = np.zeros(n, dtype=np.int64)
-    len_b = np.zeros(n, dtype=np.int64)
-    for i, (xa, xb) in enumerate(zip(a, b)):
-        if xa is None or xb is None:
-            continue
-        len_a[i] = len(xa)
-        len_b[i] = len(xb)
-        # dtype-agnostic: int32 stored shingles stay int32 through the
-        # lexsort (half the sort bytes); int64 inputs still work.
-        arrs.append(np.asarray(xa))
-        arrs.append(np.asarray(xb))
-    union_max = len_a + len_b
-    if not arrs:
-        return pd.Series(np.zeros(n, dtype=np.float64))
-    vals = np.concatenate(arrs)
-    seg = np.repeat(np.arange(n, dtype=np.int64), union_max)
-    order = np.lexsort((vals, seg))
-    sv = vals[order]
-    ss = seg[order]
-    dup = np.zeros(len(sv), dtype=bool)
-    dup[1:] = (sv[1:] == sv[:-1]) & (ss[1:] == ss[:-1])
-    inter = np.bincount(ss[dup], minlength=n).astype(np.int64)
-    union = union_max - inter
-    out = np.zeros(n, dtype=np.float64)
-    nz = (union > 0) & (len_a > 0) & (len_b > 0)
-    out[nz] = inter[nz] / union[nz]
-    return pd.Series(out)
 
 
 def verify_pairs(
@@ -121,13 +74,10 @@ def verify_pairs(
 
     # Jaccard in the JVM (guide §4.1 — prefer built-ins): both shingle
     # sets are duplicate-free, so |A ∩ B| = size(array_intersect) and
-    # union = |A| + |B| - inter, with the same guards the UDF kernel
-    # applied (either side empty/null -> 0.0). Exactly the same double
-    # (integer-valued operands, one IEEE division) — and the pair table,
-    # which carries BOTH members' shingle arrays (~1.6 KB/pair), no
-    # longer round-trips through Arrow/Python at all just to be counted.
-    # The vectorized kernel (jaccard_udf) remains for the oracle parity
-    # tests.
+    # union = |A| + |B| - inter; either side empty/null -> 0.0. Integer
+    # operands and one IEEE division, so the double equals a set-based
+    # oracle's — and the pair table, which carries BOTH members' shingle
+    # arrays (~1.6 KB/pair), never round-trips through Arrow/Python.
     la = F.coalesce(F.size("_sh_a"), F.lit(0))
     lb = F.coalesce(F.size("_sh_b"), F.lit(0))
     inter = F.coalesce(

@@ -17,18 +17,23 @@ arrows are DataFrame transformations, shuffles marked):
       ▼
     candidates (bucket sizes + self-join, hot-band star)     [shuffle: key]
       ▼
-    verified (2 joins on url + Jaccard UDF + bit_count)      [shuffle: url]
+    verified (2 joins on uid + array_intersect + bit_count)  [shuffle: uid]
       ▼
-    spans (suffix-array over still-flagged pairs)            [shuffle: url]
+    spans (suffix-array over still-flagged pairs)            [shuffle: uid]
       ▼
     dup_pairs = exact ∪ confirmed;  review_pairs = flagged
       ▼
-    assignments (connected components, O(diameter) rounds)  [shuffle: node]
+    assignments (connected components: edge list finished on the driver,
+      │          star rounds only above the edge budget;
+      │          A1 canonical rule per cluster)          [shuffle: cluster]
       ▼
-    clusters (A1 canonical rule per cluster)             [shuffle: cluster]
+    clusters (size + canonical per cluster)              [shuffle: cluster]
 
 Decision semantics per stage are documented in the operator modules; this
-module only wires them together and owns checkpoint/resume ordering.
+module wires them together and owns checkpoint/resume ordering. The stage
+builders shared with the append path (incremental.py) are defined here
+once: ``featurize``, ``span_scores``, ``scored_pairs``, ``with_canonical``
+and ``cluster_table``.
 """
 
 from __future__ import annotations
@@ -386,6 +391,136 @@ def rekey_uid_collisions(prepared: DataFrame) -> DataFrame:
     )
 
 
+def featurize(reps: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """The feature table of ``reps`` (one row per distinct text).
+
+    Slim projection: the 128-element minhash vector exists only to
+    derive the band keys inside the UDF; materializing it would be the
+    single largest column in the stage for no downstream reader."""
+    features_udf = make_features_udf(cfg)
+    return reps.select(
+        "doc_uid",
+        "url",
+        "lang",
+        "n_chars",
+        features_udf(F.col("text_norm")).alias("f"),
+    ).select(
+        "doc_uid", "url", "lang", "n_chars",
+        "f.n_tokens", "f.shingles", "f.simhash", "f.keys",
+    )
+
+
+def _join_uid(
+    df: DataFrame, table: DataFrame, value: str, side: str, alias: str
+) -> DataFrame:
+    """Join ``table``'s ``value`` column onto ``df`` as ``alias``, matching
+    ``table.doc_uid`` to ``df``'s ``uid_<side>``."""
+    uid = f"uid_{side}"
+    return df.join(
+        table.select(F.col("doc_uid").alias(uid), F.col(value).alias(alias)),
+        uid,
+    )
+
+
+def span_scores(
+    verified: DataFrame, texts: DataFrame, cfg: DedupConfig, n_partitions: int
+) -> DataFrame:
+    """Suffix-span scores of the still-flagged pairs of ``verified``;
+    ``texts`` is a ``(doc_uid, text_norm)`` table covering them."""
+    flagged = verified.filter(F.col("status") == "flagged").select(
+        "uid_a", "uid_b"
+    )
+    flagged_texts = _join_uid(
+        _join_uid(flagged, texts, "text_norm", "a", "text_a"),
+        texts, "text_norm", "b", "text_b",
+    ).select("uid_a", "uid_b", "text_a", "text_b")
+    # Explicit exchange: the flagged-pair join output is small in BYTES,
+    # so AQE coalesces it to 1-2 partitions — but the suffix stage is
+    # Python-CPU-bound per ROW; re-spread it across the cluster before
+    # mapInPandas.
+    return confirm_spans(flagged_texts.repartition(n_partitions), cfg)
+
+
+def scored_pairs(
+    verified: DataFrame,
+    spans: DataFrame,
+    exact_pairs: DataFrame,
+    urls: DataFrame,
+    cfg: DedupConfig,
+) -> DataFrame:
+    """The url-named evidence table: verified pairs with the suffix
+    upgrade applied, named through ``urls(doc_uid, url)``, plus the exact
+    edges as confirmed pairs."""
+    scored = verified.join(spans, ["uid_a", "uid_b"], "left")
+    span_confirm = (F.col("status") == "flagged") & (
+        F.col("span") >= cfg.min_span_bytes
+    )
+    upgraded = scored.withColumn(
+        "decided_by",
+        F.when(span_confirm, F.lit("suffix")).otherwise(F.col("decided_by")),
+    ).withColumn(
+        "status",
+        F.when(span_confirm, F.lit("confirmed")).otherwise(F.col("status")),
+    )
+    # map the compact uids back to urls — only on the small pair table
+    named = (
+        _join_uid(
+            _join_uid(upgraded, urls, "url", "a", "_ua"), urls, "url", "b", "_ub"
+        )
+        .withColumn("url_a", F.least("_ua", "_ub"))
+        .withColumn("url_b", F.greatest("_ua", "_ub"))
+    )
+    exact = (
+        exact_pairs.withColumn("n_keys", F.lit(None).cast("bigint"))
+        .withColumn("hamming", F.lit(0))
+        .withColumn("span", F.lit(None).cast("int"))
+        .withColumn("status", F.lit("confirmed"))
+        .withColumn("decided_by", F.lit("exact"))
+    )
+    return exact.select(*PAIR_COLUMNS).unionByName(named.select(*PAIR_COLUMNS))
+
+
+def with_canonical(assigned: DataFrame) -> DataFrame:
+    """Add ``canonical_url`` and ``cluster_size`` to ``assigned(url,
+    cluster_id, n_chars, ...)``; ``n_chars`` is dropped, other columns
+    are carried through.
+
+    A1 canonical rule (prededup.py:177-196): most frequent (ties for
+    pages) -> longest text -> lexicographically smallest url. Total order
+    => deterministic under any partitioning. Expressed as
+    min(struct(-n_chars, url)) per cluster: the aggregation partially
+    combines map-side and needs no per-cluster sort of the whole corpus
+    (a first_value-over-ordered-window shape sorts every row by
+    (cluster_id, -n_chars, url) in one pass); the join back rides the
+    same cluster_id exchange or a runtime broadcast of the per-cluster
+    table, whichever AQE finds cheaper.
+    """
+    canon = assigned.groupBy("cluster_id").agg(
+        F.min(
+            F.struct((-F.col("n_chars")).alias("_neg_chars"), F.col("url"))
+        ).alias("_best"),
+        F.count("*").alias("cluster_size"),
+    ).select(
+        "cluster_id",
+        F.col("_best.url").alias("canonical_url"),
+        "cluster_size",
+    )
+    extra = [
+        c for c in assigned.columns if c not in ("url", "cluster_id", "n_chars")
+    ]
+    return assigned.join(canon, "cluster_id").select(
+        "url", "cluster_id", "canonical_url", "cluster_size", *extra
+    )
+
+
+def cluster_table(assignments: DataFrame) -> DataFrame:
+    """One row per cluster: ``(cluster_id, size, canonical_url)``."""
+    return assignments.groupBy("cluster_id").agg(
+        F.count("*").alias("size"),
+        F.min("canonical_url").alias("canonical_url"),
+    )
+
+
 def run_dedup(
     spark: SparkSession,
     pages: DataFrame,
@@ -445,25 +580,11 @@ def run_dedup(
         "exact_pairs", lambda: exact_dup_pairs(docs, cfg), ("prepared",)
     )
 
-    features_udf = make_features_udf(cfg)
-
-    def build_features() -> DataFrame:
-        reps = exact_representatives(docs, cfg)
-        # Slim projection: the 128-element minhash vector exists only to
-        # derive the band keys inside the UDF; materializing it would be
-        # the single largest column in the stage for no downstream reader.
-        return reps.select(
-            "doc_uid",
-            "url",
-            "lang",
-            "n_chars",
-            features_udf(F.col("text_norm")).alias("f"),
-        ).select(
-            "doc_uid", "url", "lang", "n_chars",
-            "f.n_tokens", "f.shingles", "f.simhash", "f.keys",
-        )
-
-    features = commit("features", build_features, ("prepared",))
+    features = commit(
+        "features",
+        lambda: featurize(exact_representatives(docs, cfg), cfg),
+        ("prepared",),
+    )
 
     if store is not None:
         # The exploded key table is committed as its own snapshot so an
@@ -493,78 +614,20 @@ def run_dedup(
         lambda: verify_pairs(candidates, features, cfg),
         ("candidates", "features"),
     )
-
-    def build_spans() -> DataFrame:
-        flagged = verified.filter(F.col("status") == "flagged").select(
-            "uid_a", "uid_b"
-        )
-        texts = docs.select("doc_uid", "text_norm")
-        flagged_texts = (
-            flagged.join(
-                texts.select(
-                    F.col("doc_uid").alias("uid_a"),
-                    F.col("text_norm").alias("text_a"),
-                ),
-                "uid_a",
-            ).join(
-                texts.select(
-                    F.col("doc_uid").alias("uid_b"),
-                    F.col("text_norm").alias("text_b"),
-                ),
-                "uid_b",
-            )
-        ).select("uid_a", "uid_b", "text_a", "text_b")
-        # Explicit exchange: the flagged-pair join output is small in
-        # BYTES, so AQE coalesces it to 1-2 partitions — but the suffix
-        # stage is Python-CPU-bound per ROW; re-spread it across the
-        # cluster before mapInPandas.
-        return confirm_spans(flagged_texts.repartition(n_partitions), cfg)
-
-    spans = commit("spans", build_spans, ("verified", "prepared"))
-
-    def build_pairs() -> DataFrame:
-        scored = verified.join(spans, ["uid_a", "uid_b"], "left")
-        span_confirm = (F.col("status") == "flagged") & (
-            F.col("span") >= cfg.min_span_bytes
-        )
-        upgraded = scored.withColumn(
-            "decided_by",
-            F.when(span_confirm, F.lit("suffix")).otherwise(F.col("decided_by")),
-        ).withColumn(
-            "status",
-            F.when(span_confirm, F.lit("confirmed")).otherwise(F.col("status")),
-        )
-        # map the compact uids back to urls — only on the small pair table
-        urls = docs.select("doc_uid", "url")
-        named = (
-            upgraded.join(
-                urls.select(
-                    F.col("doc_uid").alias("uid_a"), F.col("url").alias("_ua")
-                ),
-                "uid_a",
-            )
-            .join(
-                urls.select(
-                    F.col("doc_uid").alias("uid_b"), F.col("url").alias("_ub")
-                ),
-                "uid_b",
-            )
-            .withColumn("url_a", F.least("_ua", "_ub"))
-            .withColumn("url_b", F.greatest("_ua", "_ub"))
-        )
-        exact = (
-            exact_pairs.withColumn("n_keys", F.lit(None).cast("bigint"))
-            .withColumn("hamming", F.lit(0))
-            .withColumn("span", F.lit(None).cast("int"))
-            .withColumn("status", F.lit("confirmed"))
-            .withColumn("decided_by", F.lit("exact"))
-        )
-        return exact.select(*PAIR_COLUMNS).unionByName(
-            named.select(*PAIR_COLUMNS)
-        )
-
-    dup_pairs = commit("dup_pairs", build_pairs, ("verified", "spans", "exact_pairs"))
-
+    spans = commit(
+        "spans",
+        lambda: span_scores(
+            verified, docs.select("doc_uid", "text_norm"), cfg, n_partitions
+        ),
+        ("verified", "prepared"),
+    )
+    dup_pairs = commit(
+        "dup_pairs",
+        lambda: scored_pairs(
+            verified, spans, exact_pairs, docs.select("doc_uid", "url"), cfg
+        ),
+        ("verified", "spans", "exact_pairs"),
+    )
     review_pairs = dup_pairs.filter(F.col("status") == "flagged")
 
     def build_assignments() -> DataFrame:
@@ -573,44 +636,16 @@ def run_dedup(
         )
         cc = connected_components(edges, cfg.max_cc_iterations)
         assigned = docs.select("url", "n_chars").join(cc, "url", "left")
-        assigned = assigned.withColumn(
-            "cluster_id", F.coalesce(F.col("cluster_id"), F.col("url"))
-        )
-        # A1 canonical rule (prededup.py:177-196): most frequent (ties for
-        # pages) -> longest text -> lexicographically smallest url. Total
-        # order => deterministic under any partitioning. Expressed as
-        # min(struct(-n_chars, url)) per cluster — identical pick to the
-        # old first_value-over-ordered-window, but the aggregation
-        # partially combines map-side and needs no per-cluster sort of
-        # the whole corpus (the window shape sorted every row by
-        # (cluster_id, -n_chars, url) in one pass); the join back rides
-        # the same cluster_id exchange or a runtime broadcast of the
-        # per-cluster table, whichever AQE finds cheaper.
-        canon = assigned.groupBy("cluster_id").agg(
-            F.min(
-                F.struct(
-                    (-F.col("n_chars")).alias("_neg_chars"), F.col("url")
-                )
-            ).alias("_best"),
-            F.count("*").alias("cluster_size"),
-        ).select(
-            "cluster_id",
-            F.col("_best.url").alias("canonical_url"),
-            "cluster_size",
-        )
-        return assigned.join(canon, "cluster_id").select(
-            "url", "cluster_id", "canonical_url", "cluster_size"
+        return with_canonical(
+            assigned.withColumn(
+                "cluster_id", F.coalesce(F.col("cluster_id"), F.col("url"))
+            )
         )
 
     assignments = commit("assignments", build_assignments, ("dup_pairs", "prepared"))
-
-    def build_clusters() -> DataFrame:
-        return assignments.groupBy("cluster_id").agg(
-            F.count("*").alias("size"),
-            F.min("canonical_url").alias("canonical_url"),
-        )
-
-    clusters = commit("clusters", build_clusters, ("assignments",))
+    clusters = commit(
+        "clusters", lambda: cluster_table(assignments), ("assignments",)
+    )
 
     return DedupResult(
         docs=docs,

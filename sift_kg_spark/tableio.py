@@ -32,6 +32,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 @dataclass
@@ -99,7 +100,16 @@ class StageStore:
         return True
 
     def read(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(self._data_path(name))
+        """The committed table, read with the schema its manifest records
+        (the one ``write`` returned): that skips the job Spark runs to
+        infer a schema from the Parquet footers."""
+        reader = self.spark.read
+        committed = self._load_manifest(name)
+        if committed is not None and committed.get("schema"):
+            reader = reader.schema(
+                T.StructType.fromJson(json.loads(committed["schema"]))
+            )
+        return reader.parquet(self._data_path(name))
 
     def write(
         self,

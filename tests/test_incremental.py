@@ -35,9 +35,56 @@ def _assignments_map(df):
     }
 
 
+def _a1_takeover_pages(like):
+    """Batch docs that join a base cluster and take its A1 canonical:
+    ``/long/9`` by longer text (its url is the family's largest), and
+    ``/tie/0`` by an equal-length text and the smaller url. Returns
+    (base rows, batch rows, expected canonical per url), as frames with
+    the columns of ``like``. The vocabulary is disjoint from the corpus."""
+    import pandas as pd
+
+    def words(fam, n):
+        return [f"{fam}{i:03d}q" for i in range(n)]
+
+    long_t = " ".join(words("lng", 80))
+    tie_w = words("tie", 80)
+    tie_t = " ".join(tie_w)
+    tie_edit = " ".join(tie_w[:40] + ["tiezzzq"] + tie_w[41:])  # same length
+    base = [
+        ("https://a1.example/long/0", long_t),
+        ("https://a1.example/long/1", long_t),
+        ("https://a1.example/tie/5", tie_t),
+        ("https://a1.example/tie/6", tie_t),
+    ]
+    batch = [
+        ("https://a1.example/long/9", long_t + " lngxtra1q lngxtra2q lngxtra3q"),
+        ("https://a1.example/tie/0", tie_edit),
+    ]
+    expected = {u: "https://a1.example/long/9" for u, _ in base[:2] + batch[:1]}
+    expected.update({u: "https://a1.example/tie/0" for u, _ in base[2:] + batch[1:]})
+
+    def frame(rows):
+        return pd.DataFrame(
+            {
+                "url": [u for u, _ in rows],
+                "warc_ts": like["warc_ts"].iloc[0],
+                "html": None,
+                "text": [t for _, t in rows],
+                "lang": "en",
+            }
+        )[list(like.columns)]
+
+    return frame(base), frame(batch), expected
+
+
 def test_incremental_matches_full_run(spark, cfg, corpus, split_corpus, tmp_path_factory):
-    base_pdf, batch_pdf = split_corpus
+    import pandas as pd
+
     all_pdf = corpus[0].drop(columns=["true_text"])
+    a1_base, a1_batch, a1_canonical = _a1_takeover_pages(all_pdf)
+    base_pdf = pd.concat([split_corpus[0], a1_base], ignore_index=True)
+    batch_pdf = pd.concat([split_corpus[1], a1_batch], ignore_index=True)
+    all_pdf = pd.concat([all_pdf, a1_base, a1_batch], ignore_index=True)
 
     wd = tmp_path_factory.mktemp("inc")
     full = run_dedup(
@@ -59,6 +106,9 @@ def test_incremental_matches_full_run(spark, cfg, corpus, split_corpus, tmp_path
     assert set(got) == set(want)
     mismatches = {u: (got[u], want[u]) for u in want if got[u] != want[u]}
     assert not mismatches, f"{len(mismatches)} mismatches, e.g. {list(mismatches.items())[:3]}"
+    # a batch doc took over a base cluster's canonical, once by length and
+    # once by url (checked against the A1 rule itself, not the full run)
+    assert {u: got[u][1] for u in a1_canonical} == a1_canonical
 
     # clusters table agrees too
     gc = {r["cluster_id"]: (r["size"], r["canonical_url"])

@@ -178,3 +178,24 @@ class TestPreparedScanParallelism:
         out = prepare_stage(pages, DedupConfig(), n_partitions=8)
         assert out.rdd.getNumPartitions() == 8
         assert out.count() == 40
+
+
+class TestJobBudget:
+    # Spark jobs of one fresh-workdir run_dedup over the 400-page test
+    # corpus in this suite's session (local[8], 8 shuffle partitions):
+    # 33, measured 2026-10-19 on three consecutive calls. The count is a
+    # fixed per-call floor (commits, AQE stage materializations,
+    # broadcasts), so a stage that starts an extra job shows here.
+    JOB_BUDGET = 33
+
+    def test_fresh_run_within_job_budget(self, spark, pages_df, cfg, tmp_path):
+        from sift_kg_spark.pipeline import run_dedup
+
+        sc = spark.sparkContext
+        sc.setJobGroup("job-budget", "run_dedup job budget")
+        try:
+            run_dedup(spark, pages_df, cfg, workdir=str(tmp_path / "wd"))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup("job-budget"))
+        assert 0 < n_jobs <= self.JOB_BUDGET, n_jobs
