@@ -108,6 +108,73 @@ from sift_kg_spark.pipeline import (
 from sift_kg_spark.tableio import StageStore
 
 
+# Base stages an append reads, when the base committed them: the required
+# three, the "keys" table (derived from features when missing), and the
+# capture and span tiers' state.
+BASE_STAGES = (
+    "prepared",
+    "features",
+    "assignments",
+    "keys",
+    "captures",
+    "dup_pairs",
+    "extracted",
+    "chunk_counts",
+    "chunk_docs",
+)
+
+ASSIGNMENT_COLUMNS = ("url", "cluster_id", "canonical_url", "cluster_size")
+
+
+def check_tiers_compose(cfg: DedupConfig) -> None:
+    """Refuse ``span_dedup`` with ``capture_dedup`` on the append and
+    stream paths.
+
+    Each tier appends on its own: capture supersession through tombstones,
+    the span tier through append-monotone chunk counts. Together, a
+    supersession replaces text, so a crossed chunk can fall back below
+    ``span_dedup_min_docs``, and restoring its spans would need a full
+    O(corpus-tokens) inverted index instead of the sub-threshold one the
+    span tier keeps (docs/ICEBERG.md §6.3).
+    """
+    if cfg.span_dedup and cfg.capture_dedup:
+        raise ValueError(
+            "span_dedup + capture_dedup cannot compose in incremental or "
+            "streaming mode: capture supersession replaces document text, "
+            "so chunk occurrence counts are no longer append-monotone — "
+            "a boilerplate chunk can de-cross min_docs, and restoring its "
+            "spans would require a full inverted index over every chunk "
+            "(O(corpus tokens) state). Run the combined tiers as a batch "
+            "rebuild, or append with one tier at a time. See "
+            "docs/ICEBERG.md §6.3."
+        )
+
+
+def fold_assignments_delta(combined: DataFrame, delta: DataFrame) -> DataFrame:
+    """MERGE an ``assignments_delta`` into a combined assignments table.
+
+    The delta carries every member of every cluster it touched, each base
+    row tagged with its ``prev_cluster_id``: drop those clusters, then
+    append the delta rows. Deletion rows (``cluster_id`` null, capture
+    tombstones) drop their previous cluster and insert nothing. The
+    touched-id probe set is one row per merged cluster, batch-scale, so
+    it broadcasts safely where the delta's full membership might not.
+    """
+    touched = (
+        delta.select(F.col("prev_cluster_id").alias("cluster_id"))
+        .filter(F.col("cluster_id").isNotNull())
+        .distinct()
+    )
+    untouched = combined.join(
+        F.broadcast(touched), "cluster_id", "leftanti"
+    ).select(*ASSIGNMENT_COLUMNS)
+    return untouched.unionByName(
+        delta.filter(F.col("cluster_id").isNotNull()).select(
+            *ASSIGNMENT_COLUMNS
+        )
+    )
+
+
 def _pair_uids(pairs: DataFrame) -> DataFrame:
     """The distinct ``doc_uid``s named by ``pairs(uid_a, uid_b)``."""
     return (
@@ -181,10 +248,11 @@ def run_dedup_incremental(
     """Dedup an append batch against a completed base run.
 
     ``base_workdir``: snapshot dir of the base :func:`run_dedup` run
-    (read-only here). Alternatively ``base_tables`` supplies the base
-    state directly as DataFrames {"prepared", "features", "assignments"}
-    and optionally {"keys"} — the streaming wrapper uses this to present
-    a UNION of per-batch generation tables without ever rewriting them.
+    (read-only here); every committed stage of :data:`BASE_STAGES` is read
+    with its manifest schema. Alternatively ``base_tables`` supplies the
+    same dict directly ({"prepared", "features", "assignments"} required,
+    the rest optional) — the streaming wrapper uses this to present a
+    UNION of per-batch generation tables without ever rewriting them.
     ``workdir``: snapshot dir for this increment's own stages. Returns a
     :class:`DedupResult` whose ``assignments`` / ``clusters`` cover the
     COMBINED corpus (base + batch) and whose ``dup_pairs`` /
@@ -198,55 +266,8 @@ def run_dedup_incremental(
     base ∪ delta, and the per-generation write volume is bounded by the
     batch's blast radius instead of the corpus.
     """
-    # Both corpus-stateful prepare tiers now compose with appends — each
-    # on its own. capture_dedup (r4 verdict item 1):
-    # keep-latest-per-canonical-URL is a monotone max_by fold over a
-    # committed captures snapshot; superseded base docs become TOMBSTONES
-    # and their clusters are repaired from the stored pair evidence.
-    # span_dedup (r4 verdict item 2): chunk counts are MONOTONE under
-    # appends (they only grow), so a chunk crosses span_dedup_min_docs at
-    # most once, carrying exactly < min_docs base docs when it does; the
-    # base run's committed (extracted, chunk_counts, chunk_docs) state —
-    # the storage switch named in docs/ICEBERG.md §6.2 — bounds the
-    # re-clean blast radius to O(batch chunks x min_docs). Re-cleaned
-    # base docs go through the SAME tombstone machinery: their text
-    # changed, so they re-enter the pipeline as batch docs and their old
-    # evidence is re-attributed to an identical-text survivor or dies.
-    # TOGETHER the tiers are refused: a supersession REPLACES text, so
-    # counts stop being monotone — a crossed chunk can fall back below
-    # min_docs, and re-adding its spans would need the carriers of an
-    # already-crossed chunk, i.e. a full O(corpus-tokens) inverted index
-    # instead of the sub-threshold index the span tier keeps
-    # (docs/ICEBERG.md §6.3). quality_gate is per-doc and composes fine.
-    if cfg.span_dedup and cfg.capture_dedup:
-        raise ValueError(
-            "span_dedup + capture_dedup cannot compose in incremental "
-            "mode: capture supersession replaces document text, so chunk "
-            "occurrence counts are no longer append-monotone — a "
-            "boilerplate chunk can de-cross min_docs, and restoring its "
-            "spans would require a full inverted index over every chunk "
-            "(O(corpus tokens) state) rather than the sub-threshold "
-            "index the span tier maintains. Run the combined tiers as a "
-            "batch rebuild, or append with one tier at a time. See "
-            "docs/ICEBERG.md §6.3."
-        )
-    base_keys: DataFrame | None = None
-    base_captures: DataFrame | None = None
-    base_pairs: DataFrame | None = None
-    base_extracted: DataFrame | None = None
-    base_chunk_counts: DataFrame | None = None
-    base_chunk_docs: DataFrame | None = None
-    if base_tables is not None:
-        base_prepared = base_tables["prepared"]
-        base_features = base_tables["features"]
-        base_assign = base_tables["assignments"]
-        base_keys = base_tables.get("keys")
-        base_captures = base_tables.get("captures")
-        base_pairs = base_tables.get("dup_pairs")
-        base_extracted = base_tables.get("extracted")
-        base_chunk_counts = base_tables.get("chunk_counts")
-        base_chunk_docs = base_tables.get("chunk_docs")
-    else:
+    check_tiers_compose(cfg)
+    if base_tables is None:
         if base_workdir is None:
             raise ValueError(
                 "run_dedup_incremental requires base_workdir or base_tables"
@@ -258,24 +279,18 @@ def run_dedup_incremental(
                     f"base run at {base_workdir} lacks committed stage "
                     f"'{required}' (or was produced under a different config)"
                 )
-        base_prepared = base.read("prepared")
-        base_features = base.read("features")
-        base_assign = base.read("assignments")
-        if base.exists("keys"):
-            base_keys = base.read("keys")
-        if cfg.capture_dedup:
-            if base.exists("captures"):
-                base_captures = base.read("captures")
-        if cfg.capture_dedup or cfg.span_dedup:
-            if base.exists("dup_pairs"):
-                base_pairs = base.read("dup_pairs")
-        if cfg.span_dedup:
-            if base.exists("extracted"):
-                base_extracted = base.read("extracted")
-            if base.exists("chunk_counts"):
-                base_chunk_counts = base.read("chunk_counts")
-            if base.exists("chunk_docs"):
-                base_chunk_docs = base.read("chunk_docs")
+        base_tables = {
+            name: base.read(name) for name in BASE_STAGES if base.exists(name)
+        }
+    base_prepared = base_tables["prepared"]
+    base_features = base_tables["features"]
+    base_assign = base_tables["assignments"]
+    base_keys = base_tables.get("keys")
+    base_captures = base_tables.get("captures")
+    base_pairs = base_tables.get("dup_pairs")
+    base_extracted = base_tables.get("extracted")
+    base_chunk_counts = base_tables.get("chunk_counts")
+    base_chunk_docs = base_tables.get("chunk_docs")
     if cfg.capture_dedup and (base_captures is None or base_pairs is None):
         raise ValueError(
             "capture_dedup in incremental mode needs the base run's "
@@ -1013,41 +1028,19 @@ def run_dedup_incremental(
         "assignments_delta", build_assignments_delta, ("dup_pairs", "prepared")
     )
 
-    def build_assignments() -> DataFrame:
-        # touched base cluster ids: one row per merged cluster — batch-
-        # scale by construction (bounded by the number of new edges), so
-        # the anti-join probe set broadcasts safely where the full delta
-        # membership might not.
-        touched = (
-            assignments_delta.select(
-                F.col("prev_cluster_id").alias("cluster_id")
-            )
-            .filter(F.col("cluster_id").isNotNull())
-            .distinct()
-        )
-        untouched = base_assign.join(
-            F.broadcast(touched), "cluster_id", "leftanti"
-        ).select("url", "cluster_id", "canonical_url", "cluster_size")
-        return untouched.unionByName(
-            # deletion rows (cluster_id NULL — capture tombstones) drop
-            # their prev cluster via ``touched`` and re-insert nothing
-            assignments_delta.filter(F.col("cluster_id").isNotNull()).select(
-                "url", "cluster_id", "canonical_url", "cluster_size"
-            )
-        )
-
     if materialize_assignments:
         assignments = commit(
-            "assignments", build_assignments, ("assignments_delta",)
+            "assignments",
+            lambda: fold_assignments_delta(base_assign, assignments_delta),
+            ("assignments_delta",),
         )
-    else:
-        assignments = build_assignments().localCheckpoint(eager=False)
-
-    if materialize_assignments:
         clusters = commit(
             "clusters", lambda: cluster_table(assignments), ("assignments",)
         )
     else:
+        assignments = fold_assignments_delta(
+            base_assign, assignments_delta
+        ).localCheckpoint(eager=False)
         clusters = cluster_table(assignments).localCheckpoint(eager=False)
 
     return DedupResult(

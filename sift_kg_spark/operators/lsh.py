@@ -187,6 +187,14 @@ def candidate_pairs(keys: DataFrame, cfg: DedupConfig) -> DataFrame:
         .filter(F.col("uid_a") < F.col("uid_b"))
         .select("uid_a", "uid_b", "key")
     )
+    return _collapse(pairs)
+
+
+def _collapse(pairs: DataFrame) -> DataFrame:
+    """One row per (uid_a, uid_b) from its shared keys: ``n_keys`` counts
+    them and ``channel`` is the strongest co-firing channel (min tag).
+    Only pairs whose SOLE evidence is the anchor channel face the >= 2
+    gate."""
     collapsed = (
         pairs.withColumn(
             "channel_tag", (F.col("key").bitwiseAND(F.lit(3))).cast("int")
@@ -200,8 +208,6 @@ def candidate_pairs(keys: DataFrame, cfg: DedupConfig) -> DataFrame:
         .drop("channel_tag")
         .select("uid_a", "uid_b", "channel", "n_keys")
     )
-    # channel = strongest co-firing channel (min tag): only pairs whose
-    # SOLE evidence is the anchor channel face the >= 2 gate.
     return collapsed.filter(
         (F.col("channel") != "anchor") | (F.col("n_keys") >= 2)
     )
@@ -288,23 +294,7 @@ def candidate_pairs_incremental(keys: DataFrame, cfg: DedupConfig) -> DataFrame:
         )
     )
 
-    pairs = all_pairs.unionByName(star_pairs)
-    collapsed = (
-        pairs.withColumn(
-            "channel_tag", (F.col("key").bitwiseAND(F.lit(3))).cast("int")
-        )
-        .groupBy("uid_a", "uid_b")
-        .agg(
-            F.count("*").alias("n_keys"),
-            F.min("channel_tag").alias("channel_tag"),
-        )
-        .withColumn("channel", _channel_name())
-        .drop("channel_tag")
-        .select("uid_a", "uid_b", "channel", "n_keys")
-    )
-    return collapsed.filter(
-        (F.col("channel") != "anchor") | (F.col("n_keys") >= 2)
-    )
+    return _collapse(all_pairs.unionByName(star_pairs))
 
 
 def bucket_size_histogram(keys: DataFrame, cfg: DedupConfig) -> DataFrame:

@@ -15,21 +15,26 @@ Design notes for cluster scale:
   snapshots + manifests), so the stream is used purely for incremental
   file discovery + scheduling. This is the documented Spark pattern for
   stateful jobs whose state lives in external tables.
-* State between micro-batches IS the snapshot directory: batch N's
-  batch-only `prepared`/`features`/`keys` snapshots plus its
-  `assignments_delta` become part of batch N+1's base. A crashed
-  micro-batch replays idempotently — re-delivered urls
-  are dropped by the increment's broadcast anti-join, and the streaming
-  checkpoint prevents double-processing of input files.
+* State between micro-batches IS the snapshot directory: every
+  generation (``gen=<n>``) and every compacted snapshot (``compact=<g>``)
+  is a StageStore directory of Parquet tables with their manifests.
+  Batch N's batch-only `prepared`/`features`/`keys` snapshots plus its
+  `assignments_delta` become part of batch N+1's base, read with the
+  manifest schemas (no footer-inference job per read; snapshots
+  compacted before they carried manifests read by inference). A crashed
+  micro-batch replays idempotently — re-delivered urls are dropped by
+  the increment's broadcast anti-join, and the streaming checkpoint
+  prevents double-processing of input files.
 * Generation COMPACTION bounds plan depth: the base is the union of every
   generation's immutable batch-only snapshot, so after hundreds of
   micro-batches file listing + logical-plan size would grow
   O(generations). Every ``compact_every``-th generation the union is
-  rewritten into one consolidated snapshot (``compact=<g>``) and the
-  latest-pointer records it; subsequent batches read 1 compacted snapshot
-  + at most ``compact_every - 1`` live generations. The rewrite is
-  O(corpus) but amortizes to O(corpus / compact_every) per batch — at the
-  Iceberg seam this is the table-maintenance `rewrite_data_files` job.
+  rewritten through StageStore into one consolidated snapshot
+  (``compact=<g>``) and the latest-pointer records it; subsequent
+  batches read 1 compacted snapshot + at most ``compact_every - 1`` live
+  generations. The rewrite is O(corpus) but amortizes to
+  O(corpus / compact_every) per batch — at the Iceberg seam this is the
+  table-maintenance `rewrite_data_files` job.
 * Watermarks/event-time operators are deliberately absent: dedup keys on
   content, not arrival time; late data is just another append batch.
 
@@ -57,15 +62,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sift_kg_spark.config import DEFAULT_CONFIG, DedupConfig
-from sift_kg_spark.incremental import run_dedup_incremental
+from sift_kg_spark.incremental import (
+    ASSIGNMENT_COLUMNS,
+    check_tiers_compose,
+    fold_assignments_delta,
+    run_dedup_incremental,
+)
 from sift_kg_spark.pipeline import run_dedup
+from sift_kg_spark.tableio import StageStore
 
 PAGES_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
 )
-
-# per-generation tables that accumulate into the base state
-_BASE_STAGE_TABLES = ("prepared", "features", "keys")
 
 
 def _gen_dir(workdir: str, gen: int) -> str:
@@ -91,23 +99,13 @@ def latest_generation(workdir: str) -> int | None:
 
 
 def _commit_latest(
-    workdir: str,
-    gen: int,
-    batch_id: int,
-    n_rows: int,
-    compact_gen: int | None,
+    workdir: str, gen: int, batch_id: int, compact_gen: int | None
 ) -> None:
     ptr = os.path.join(workdir, "_latest.json")
     tmp = ptr + ".tmp"
     with open(tmp, "w") as fh:
         json.dump(
-            {
-                "gen": gen,
-                "batch_id": batch_id,
-                "rows": n_rows,
-                "compact_gen": compact_gen,
-            },
-            fh,
+            {"gen": gen, "batch_id": batch_id, "compact_gen": compact_gen}, fh
         )
     os.replace(tmp, ptr)  # atomic generation flip
 
@@ -130,28 +128,13 @@ def _union_all(frames: list[DataFrame]) -> DataFrame:
     return reduce(lambda a, b: a.unionByName(b), frames)
 
 
-_ASSIGN_COLS = ("url", "cluster_id", "canonical_url", "cluster_size")
-
-
-def _apply_assignments_delta(combined: DataFrame, delta: DataFrame) -> DataFrame:
-    """MERGE one generation's assignments delta into the combined view.
-
-    The delta carries every member of every touched cluster (plus all new
-    docs), each base row tagged with its prev_cluster_id — so the merge is
-    'drop the touched clusters, append the delta'. The touched-id probe
-    set is batch-scale (one row per merged cluster) and broadcasts safely.
-    """
-    touched = (
-        delta.select(F.col("prev_cluster_id").alias("cluster_id"))
-        .filter(F.col("cluster_id").isNotNull())
-        .distinct()
-    )
-    untouched = combined.join(F.broadcast(touched), "cluster_id", "leftanti")
-    return untouched.select(*_ASSIGN_COLS).unionByName(
-        # deletion rows (cluster_id NULL — capture tombstones) drop their
-        # prev cluster via ``touched`` and re-insert nothing
-        delta.filter(F.col("cluster_id").isNotNull()).select(*_ASSIGN_COLS)
-    )
+def _read_table(
+    spark: SparkSession, directory: str, name: str
+) -> DataFrame | None:
+    """``name`` as committed in a generation or compacted snapshot
+    directory, read with its manifest schema; None when it is absent."""
+    store = StageStore(spark, directory)
+    return store.read(name) if store.has_table(name) else None
 
 
 def _assignments_through(
@@ -164,237 +147,140 @@ def _assignments_through(
     cg, live = base_sources(workdir, upto_gen)
     combined: DataFrame | None = None
     if cg is not None:
-        for candidate in (
-            os.path.join(_compact_dir(workdir, cg), "assignments.parquet"),
-            # legacy state dirs compacted before assignments joined the
-            # compact snapshot: every legacy generation committed the full
-            # combined table, so generation cg's copy is the fold base
-            os.path.join(_gen_dir(workdir, cg), "assignments.parquet"),
-        ):
-            if os.path.exists(candidate):
-                combined = spark.read.parquet(candidate).select(*_ASSIGN_COLS)
-                break
+        # legacy state dirs compacted before assignments joined the
+        # compact snapshot: every legacy generation committed the full
+        # combined table, so generation cg's copy is the fold base
+        combined = _read_table(spark, _compact_dir(workdir, cg), "assignments")
+        if combined is None:
+            combined = _read_table(spark, _gen_dir(workdir, cg), "assignments")
     for g in live:
-        full = os.path.join(_gen_dir(workdir, g), "assignments.parquet")
-        if os.path.exists(full):
+        full = _read_table(spark, _gen_dir(workdir, g), "assignments")
+        if full is not None:
             # bootstrap generation (or legacy combined commit): replaces
             # everything before it
-            combined = spark.read.parquet(full).select(*_ASSIGN_COLS)
+            combined = full
             continue
-        delta = spark.read.parquet(
-            os.path.join(_gen_dir(workdir, g), "assignments_delta.parquet")
-        )
         if combined is None:
             raise FileNotFoundError(
                 f"generation {g} committed an assignments delta but no "
                 "earlier full assignments table exists to fold it into "
                 f"(state dir {workdir})"
             )
-        combined = _apply_assignments_delta(combined, delta)
+        delta = StageStore(spark, _gen_dir(workdir, g)).read(
+            "assignments_delta"
+        )
+        combined = fold_assignments_delta(combined, delta)
     if combined is None:
         raise FileNotFoundError(
             f"no assignments table found through generation {upto_gen} "
             f"in {workdir}"
         )
-    return combined
-
-
-def _gen_paths(
-    workdir: str, cg: int | None, live: list[int], name: str
-) -> list[str]:
-    paths = []
-    if cg is not None:
-        paths.append(os.path.join(_compact_dir(workdir, cg), f"{name}.parquet"))
-    paths.extend(
-        os.path.join(_gen_dir(workdir, g), f"{name}.parquet") for g in live
-    )
-    return paths
+    return combined.select(*ASSIGNMENT_COLUMNS)
 
 
 def _base_tables(spark: SparkSession, workdir: str, upto_gen: int) -> dict:
     """Assemble the accumulated base state for generation ``upto_gen + 1``.
 
-    prepared/features/keys are the union of the compacted snapshot plus
-    every live generation's batch-only snapshot (each immutable; nothing
-    rewritten outside compaction). assignments are the compacted combined
-    table with the live generations' DELTAS folded in — no generation
-    ever rewrites the combined table (the O(corpus)-per-batch cost the r3
-    verdict flagged); only compaction does, amortized to
-    O(corpus / compact_every).
+    Every table is the union over one ordered list of sources — the
+    compacted snapshot (standing for generation ``cg``), then each live
+    generation — each source read with its manifest schema, so assembly
+    runs no Spark job. Nothing is rewritten outside compaction.
+    assignments are the compacted combined table with the live
+    generations' DELTAS folded in (``_assignments_through``).
 
-    Capture-mode state (presence-driven — the files exist iff the stream
-    runs with ``capture_dedup``): per-generation TOMBSTONES (docs a later
-    capture superseded) filter prepared/features/keys lazily — broadcast
-    anti-joins over a batch-scale set, applied physically only by
-    compaction; re-homed feature/key rows union in; the ``captures``
-    winner snapshot and the accumulated ``dup_pairs`` evidence (both
-    tombstone-filtered) join the dict so the incremental engine can run
-    its supersede + cluster-repair logic.
+    Tombstones (docs a later capture superseded or a span crossing
+    re-cleaned) are GENERATION-SCOPED: a tombstone from generation g
+    targets docs committed by generations < g. A re-crawl re-adds the
+    SAME url (hence the same doc_uid) in the generation that issued the
+    tombstone, so each source is anti-joined (broadcast, batch-scale
+    set) only against tombstones from LATER generations; compaction
+    applies them physically. Re-homed feature/key rows (capture repair)
+    union into features/keys; the ``captures`` winners and the ``dup_pairs``
+    evidence join the dict so the incremental engine can run its
+    supersede + cluster-repair logic. A pair dies when EITHER endpoint is
+    tombstoned (the issuing generation committed the rewritten
+    replacements alongside).
+
+    The span tier's tables are plain unions, deliberately NOT
+    tombstone-filtered:
+    - ``extracted`` rows hold ORIGINAL text: a re-cleaned doc's original
+      stays valid — a later crossing re-cleans it again from the same
+      original.
+    - ``chunk_counts`` rows are per-generation COUNT DELTAS over
+      originals (readers sum after probing); originals never change
+      under append-only ingest, so no row ever retracts.
+    - ``chunk_docs`` rows map chunks to their ORIGINAL carriers; rows for
+      chunks that crossed in an earlier generation are stale but inert
+      (the incremental crossing filter requires the current summed count
+      to still be below min_docs).
     """
     cg, live = base_sources(workdir, upto_gen)
+    sources = [(g, _gen_dir(workdir, g)) for g in live]
+    if cg is not None:
+        sources.insert(0, (cg, _compact_dir(workdir, cg)))
+    tombs = [
+        (g, t)
+        for g, d in sources
+        if (t := _read_table(spark, d, "tombstones")) is not None
+    ]
 
-    # Tombstones are GENERATION-SCOPED: a tombstone from generation g
-    # targets docs committed by generations < g. A re-crawl re-adds the
-    # SAME url (hence the same doc_uid) in the generation that issued the
-    # tombstone, so filtering globally would kill the fresh rows too —
-    # each source is filtered only by tombstones from LATER generations.
-    tomb_by_gen = {}
-    for g in live:
-        p = os.path.join(_gen_dir(workdir, g), "tombstones.parquet")
-        if os.path.exists(p):
-            tomb_by_gen[g] = spark.read.parquet(p)
-    any_tombs = bool(tomb_by_gen)
-
-    def _tombs_after(gen: int) -> DataFrame | None:
-        dfs = [df for g, df in tomb_by_gen.items() if g > gen]
-        return _union_all(dfs) if dfs else None
-
-    def _scoped(name: str, key: str, paths_of) -> DataFrame | None:
-        """Union the compact + live snapshots of ``name``, each anti-joined
-        against the tombstones of strictly later generations on ``key``.
-        The compact snapshot covers generations <= cg, so every live
-        tombstone applies to it."""
+    def gather(
+        name: str, tomb_keys: tuple[str, ...], every_source: bool
+    ) -> DataFrame | None:
+        """Union ``name`` over the sources, each anti-joined on
+        ``tomb_keys`` (``doc_uid``, else matched to the tombstone url)
+        against the tombstones of strictly later generations. With
+        ``every_source`` a source lacking the table omits it altogether:
+        legacy state written before the stage existed, which
+        run_dedup_incremental derives instead (keys: re-exploded from
+        features)."""
         parts = []
-        if cg is not None:
-            for p in paths_of(None, cg):
-                if not os.path.exists(p):
+        for g, d in sources:
+            df = _read_table(spark, d, name)
+            if df is None:
+                if every_source:
                     return None
-                df = spark.read.parquet(p)
-                t = _tombs_after(cg)
-                if t is not None:
-                    df = df.join(F.broadcast(t.select(key)), key, "leftanti")
-                parts.append(df)
-        for g in live:
-            for p in paths_of(g, None):
-                if not os.path.exists(p):
-                    return None
-                df = spark.read.parquet(p)
-                t = _tombs_after(g)
-                if t is not None:
-                    df = df.join(F.broadcast(t.select(key)), key, "leftanti")
-                parts.append(df)
+                continue
+            later = [t for tg, t in tombs if tg > g]
+            if later and tomb_keys:
+                dead = _union_all(later)
+                for col in tomb_keys:
+                    src = "doc_uid" if col == "doc_uid" else "url"
+                    df = df.join(
+                        F.broadcast(dead.select(F.col(src).alias(col))),
+                        col,
+                        "leftanti",
+                    )
+            parts.append(df)
         return _union_all(parts) if parts else None
 
-    def _paths_for(name: str):
-        def paths_of(g: int | None, compact_g: int | None) -> list[str]:
-            if compact_g is not None:
-                return [
-                    os.path.join(_compact_dir(workdir, compact_g), f"{name}.parquet")
-                ]
-            return [os.path.join(_gen_dir(workdir, g), f"{name}.parquet")]
-
-        return paths_of
-
-    tables: dict[str, DataFrame] = {}
-    for name, key in (
-        ("prepared", "url"),
-        ("features", "doc_uid"),
-        ("keys", "doc_uid"),
-    ):
-        df = _scoped(name, key, _paths_for(name))
-        if df is None:
-            # legacy state written before this stage existed: omit the
-            # table and let run_dedup_incremental's documented fallback
-            # derive it (keys: re-exploded from features) instead of
-            # failing on a raw parquet path-not-found (r3 ADVICE)
-            continue
-        if name in ("features", "keys"):
-            # re-homed rows (capture repair) live only in gen dirs; a
-            # re-homed doc that later dies is filtered by its own later
-            # tombstone like any other row
-            extra = []
-            for g in live:
-                p = os.path.join(
-                    _gen_dir(workdir, g), f"{name}_rehomed.parquet"
-                )
-                if os.path.exists(p):
-                    rdf = spark.read.parquet(p)
-                    t = _tombs_after(g)
-                    if t is not None:
-                        rdf = rdf.join(
-                            F.broadcast(t.select("doc_uid")),
-                            "doc_uid",
-                            "leftanti",
-                        )
-                    extra.append(rdf)
-            if extra:
-                df = df.unionByName(_union_all(extra))
-        tables[name] = df
-
-    cap_present = any(
-        os.path.exists(p) for p in _gen_paths(workdir, cg, live, "captures")
-    )
-    span_present = any(
-        os.path.exists(p)
-        for p in _gen_paths(workdir, cg, live, "chunk_counts")
-    )
-    if cap_present:
-        caps = _scoped("captures", "url", _paths_for("captures"))
-        if caps is not None:
-            tables["captures"] = caps
-    if span_present:
-        # Span-tier state: plain unions, deliberately NOT
-        # tombstone-filtered.
-        # - ``extracted`` rows hold ORIGINAL text: a re-cleaned
-        #   (tombstoned) doc's original stays valid — a later crossing
-        #   re-cleans it again from the same original.
-        # - ``chunk_counts`` rows are per-generation COUNT DELTAS over
-        #   originals (readers sum after probing); originals never
-        #   change under append-only ingest, so no row ever retracts.
-        # - ``chunk_docs`` rows map chunks to their ORIGINAL carriers;
-        #   rows for chunks that crossed in an earlier generation are
-        #   stale but inert (the incremental crossing filter requires
-        #   the current summed count to still be below min_docs).
-        for name in ("extracted", "chunk_counts", "chunk_docs"):
-            parts = [
-                spark.read.parquet(p)
-                for p in _gen_paths(workdir, cg, live, name)
-                if os.path.exists(p)
-            ]
-            if parts:
-                tables[name] = _union_all(parts)
-    if cap_present or span_present:
-        # pair evidence: a pair dies when EITHER endpoint is tombstoned
-        # by a later generation (the issuing generation committed the
-        # rewritten replacements alongside). The span tier needs this
-        # for the same cluster-repair path a capture supersession takes.
-        parts = []
-        for gen_key, path in (
-            [(cg, os.path.join(_compact_dir(workdir, cg), "dup_pairs.parquet"))]
-            if cg is not None
-            else []
-        ) + [
-            (g, os.path.join(_gen_dir(workdir, g), "dup_pairs.parquet"))
-            for g in live
-        ]:
-            if not os.path.exists(path):
-                continue
-            df = spark.read.parquet(path)
-            t = _tombs_after(gen_key) if any_tombs else None
-            if t is not None:
-                t_urls = t.select("url")
-                df = df.join(
-                    F.broadcast(t_urls.withColumnRenamed("url", "url_a")),
-                    "url_a",
-                    "leftanti",
-                ).join(
-                    F.broadcast(t_urls.withColumnRenamed("url", "url_b")),
-                    "url_b",
-                    "leftanti",
-                )
-            parts.append(df)
-        if parts:
-            tables["dup_pairs"] = _union_all(parts)
-
+    tables = {
+        "prepared": gather("prepared", ("url",), True),
+        "features": gather("features", ("doc_uid",), True),
+        "keys": gather("keys", ("doc_uid",), True),
+        "captures": gather("captures", ("url",), True),
+        "extracted": gather("extracted", (), False),
+        "chunk_counts": gather("chunk_counts", (), False),
+        "chunk_docs": gather("chunk_docs", (), False),
+    }
+    for name in ("features", "keys"):
+        rehomed = gather(f"{name}_rehomed", ("doc_uid",), False)
+        if tables[name] is not None and rehomed is not None:
+            tables[name] = tables[name].unionByName(rehomed)
+    if tables["captures"] is not None or tables["chunk_counts"] is not None:
+        # pair evidence feeds only the capture and span cluster repair
+        tables["dup_pairs"] = gather("dup_pairs", ("url_a", "url_b"), False)
     tables["assignments"] = _assignments_through(spark, workdir, upto_gen)
-    return tables
+    return {name: df for name, df in tables.items() if df is not None}
 
 
 def _compact(spark: SparkSession, workdir: str, upto_gen: int) -> None:
     """Rewrite the base-table unions through ``upto_gen`` into one
-    consolidated snapshot. Written FULLY before the pointer flips, so a
-    crash mid-compaction leaves the previous (still valid) sources live
-    and the half-written dir is simply overwritten next time.
+    consolidated snapshot, committed table by table through
+    :class:`StageStore` (so it carries manifests like any generation).
+    Written FULLY before the pointer flips, so a crash mid-compaction
+    leaves the previous (still valid) sources live and the half-written
+    dir is simply overwritten next time.
 
     The snapshot is exactly the assembled base view: tombstones applied
     physically, re-homed rows folded in, assignment deltas folded into
@@ -402,11 +288,9 @@ def _compact(spark: SparkSession, workdir: str, upto_gen: int) -> None:
     at the Iceberg seam. Per-batch writes stay O(touched clusters);
     tombstone accumulation restarts at zero here.
     """
-    out = _compact_dir(workdir, upto_gen)
+    out = StageStore(spark, _compact_dir(workdir, upto_gen))
     for name, df in _base_tables(spark, workdir, upto_gen).items():
-        df.write.mode("overwrite").parquet(
-            os.path.join(out, f"{name}.parquet")
-        )
+        out.write(name, df)
 
 
 def process_batch(
@@ -429,13 +313,13 @@ def process_batch(
     gen_wd = _gen_dir(workdir, gen)
 
     if prev is None:
-        res = run_dedup(spark, pages, cfg, workdir=gen_wd, resume=False)
+        run_dedup(spark, pages, cfg, workdir=gen_wd, resume=False)
     else:
         # materialize_assignments=False: the generation writes only the
         # O(touched-clusters) assignments_delta; the combined table exists
         # as a fold over (compacted base + deltas), rewritten on disk only
         # by compaction.
-        res = run_dedup_incremental(
+        run_dedup_incremental(
             spark,
             pages,
             cfg,
@@ -444,7 +328,6 @@ def process_batch(
             base_tables=_base_tables(spark, workdir, prev),
             materialize_assignments=False,
         )
-    n = res.assignments.count()
 
     state = _read_state(workdir) or {}
     compact_gen = state.get("compact_gen")
@@ -452,7 +335,7 @@ def process_batch(
     if compact_every and n_live >= compact_every:
         _compact(spark, workdir, upto_gen=gen)
         compact_gen = gen
-    _commit_latest(workdir, gen, batch_id, n, compact_gen)
+    _commit_latest(workdir, gen, batch_id, compact_gen)
 
 
 def read_assignments(
@@ -487,22 +370,9 @@ def stream_dedup(
     directory and stops (batch-style backfill, also what tests use);
     ``False`` runs continuously with the default micro-batch trigger.
     """
-    if cfg.span_dedup and cfg.capture_dedup:
-        # fail BEFORE the query starts: generation 0 (a full run) would
-        # accept both tiers and generation 1+ (the incremental path)
-        # would then refuse the combination mid-stream, leaving a
-        # half-built state dir. Same contract as run_dedup_incremental:
-        # each tier streams on its own (capture via the supersede/
-        # tombstone machinery, span via monotone chunk-count deltas +
-        # crossing re-cleans), but together capture supersession makes
-        # chunk counts non-monotone and de-crossed chunks would need a
-        # full inverted index to restore (docs/ICEBERG.md §6.3).
-        raise ValueError(
-            "span_dedup + capture_dedup cannot compose in streaming "
-            "mode (capture supersession breaks the span tier's "
-            "count-monotonicity contract); stream with one tier at a "
-            "time or rebuild in batch. See docs/ICEBERG.md §6.3."
-        )
+    # refuse BEFORE the query starts: generation 0 (a full run) would
+    # accept both tiers, and generation 1 would then fail mid-stream
+    check_tiers_compose(cfg)
     os.makedirs(workdir, exist_ok=True)
     stream = (
         spark.readStream.schema(PAGES_SCHEMA)

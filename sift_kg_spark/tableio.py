@@ -23,6 +23,7 @@ count of every written file is read from its Parquet footer and appended to
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import json
 import os
@@ -34,6 +35,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+# Schemas of the per-partition metrics and lineage logs, as ``write``
+# lays them down (pandas int64 -> bigint, float64 -> double).
+_METRICS_SCHEMA = "partition_id bigint, rows bigint, run_id string, stage string"
+_LINEAGE_SCHEMA = (
+    "run_id string, stage string, inputs array<string>, rows bigint, "
+    "elapsed_sec double, committed_at string"
+)
+
 
 @dataclass
 class StageStore:
@@ -44,9 +53,6 @@ class StageStore:
     # it was produced under the same config (a changed shingle/threshold
     # config silently reusing old snapshots would be a correctness bug).
     context: dict | None = None
-
-    def __post_init__(self) -> None:
-        os.makedirs(self._manifest_dir, exist_ok=True)
 
     # -- paths -----------------------------------------------------------
     @property
@@ -99,10 +105,16 @@ class StageStore:
                 return False
         return True
 
+    def has_table(self, name: str) -> bool:
+        """``name``'s data directory is on disk. Unlike :meth:`exists` this
+        asks for no manifest: legacy snapshots carry none."""
+        return os.path.exists(self._data_path(name))
+
     def read(self, name: str) -> DataFrame:
         """The committed table, read with the schema its manifest records
         (the one ``write`` returned): that skips the job Spark runs to
-        infer a schema from the Parquet footers."""
+        infer a schema from the Parquet footers. A table without a
+        manifest is read by inference."""
         reader = self.spark.read
         committed = self._load_manifest(name)
         if committed is not None and committed.get("schema"):
@@ -129,6 +141,7 @@ class StageStore:
         """
         t0 = time.monotonic()
         path = self._data_path(name)
+        os.makedirs(self._manifest_dir, exist_ok=True)
         try:
             os.remove(self._manifest_path(name))
         except FileNotFoundError:
@@ -150,12 +163,10 @@ class StageStore:
         # re-scanned every committed table once per stage. At cluster
         # scale this would be a writeTo(...).append() to an Iceberg
         # metrics table — same data, same shape.
-        import glob as _glob
-
         import pandas as pd
         import pyarrow.parquet as pq
 
-        files = sorted(_glob.glob(os.path.join(path, "part-*.parquet")))
+        files = sorted(glob.glob(os.path.join(path, "part-*.parquet")))
         part_metrics = pd.DataFrame(
             {
                 "partition_id": pd.array(range(len(files)), dtype="int64"),
@@ -232,11 +243,21 @@ class StageStore:
         return self.write(name, build(), inputs=inputs, repartition_by=repartition_by)
 
     # -- introspection ----------------------------------------------------
+    def _read_log(self, name: str, schema: str) -> DataFrame:
+        """A ``_``-prefixed log table, read from its part files with the
+        schema ``write`` gives it. Spark treats the directory itself as
+        hidden (it warns, then lists it anyway) and infers a schema with
+        one job; the named files under a fixed schema take none."""
+        files = sorted(
+            glob.glob(os.path.join(self.workdir, name, "part-*.parquet"))
+        )
+        return self.spark.read.schema(schema).parquet(*files)
+
     def metrics(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.workdir, "_metrics.parquet"))
+        return self._read_log("_metrics.parquet", _METRICS_SCHEMA)
 
     def lineage(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.workdir, "_lineage.parquet"))
+        return self._read_log("_lineage.parquet", _LINEAGE_SCHEMA)
 
     def manifest(self, name: str) -> dict:
         with open(self._manifest_path(name)) as fh:

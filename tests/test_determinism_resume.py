@@ -51,8 +51,15 @@ class TestResume:
 
         # -- metrics + lineage recorded for the same run (one store run
         # shared with the resume assertions to keep the suite fast) --
-        metrics = resumed.store.metrics()
-        lineage = resumed.store.lineage()
+        # both logs are read with their fixed schemas: no inference job
+        sc = spark.sparkContext
+        sc.setJobGroup("read-logs", "metrics and lineage reads")
+        try:
+            metrics = resumed.store.metrics()
+            lineage = resumed.store.lineage()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup("read-logs") == []
         stages = {r.stage for r in lineage.collect()}
         assert {"prepared", "features", "candidates", "verified",
                 "dup_pairs", "assignments", "clusters"} <= stages

@@ -199,3 +199,34 @@ class TestJobBudget:
             sc.setLocalProperty("spark.jobGroup.id", None)
         n_jobs = len(sc.statusTracker().getJobIdsForGroup("job-budget"))
         assert 0 < n_jobs <= self.JOB_BUDGET, n_jobs
+
+    # Spark jobs of one run_dedup_incremental appending the 5% url-hash
+    # batch of the same corpus onto a committed base run of the rest
+    # (the base run is not counted): 66, measured 2026-10-20 before the
+    # append read its base through one dict of manifest-schema reads, both
+    # alone and after the fresh run above; 66 after it as well.
+    APPEND_JOB_BUDGET = 66
+
+    def test_append_within_job_budget(self, spark, pages_df, cfg, tmp_path):
+        from sift_kg_spark.incremental import run_dedup_incremental
+        from sift_kg_spark.pipeline import run_dedup
+
+        in_batch = F.pmod(F.xxhash64("url"), F.lit(20)) == 0
+        base_wd = str(tmp_path / "base")
+        run_dedup(spark, pages_df.filter(~in_batch), cfg, workdir=base_wd)
+        sc = spark.sparkContext
+        sc.setJobGroup("append-job-budget", "run_dedup_incremental job budget")
+        try:
+            run_dedup_incremental(
+                spark,
+                pages_df.filter(in_batch),
+                cfg,
+                base_workdir=base_wd,
+                workdir=str(tmp_path / "inc"),
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        n_jobs = len(
+            sc.statusTracker().getJobIdsForGroup("append-job-budget")
+        )
+        assert 0 < n_jobs <= self.APPEND_JOB_BUDGET, n_jobs

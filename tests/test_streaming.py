@@ -73,7 +73,7 @@ def test_stream_compaction_bounds_generations(spark, cfg, tmp_path_factory):
     more than 1 compacted snapshot + 1 live generation — and the result
     still equals the full run after compactions happened mid-stream."""
     from sift_kg_spark.fixtures import generate_corpus
-    from sift_kg_spark.streaming import base_sources, process_batch
+    from sift_kg_spark.streaming import _base_tables, base_sources, process_batch
 
     pages_pdf = generate_corpus(150, seed=23)[0].drop(columns=["true_text"])
     wd = tmp_path_factory.mktemp("stream_compact")
@@ -96,6 +96,16 @@ def test_stream_compaction_bounds_generations(spark, cfg, tmp_path_factory):
     cg, live = base_sources(state, gen)
     n_sources = (1 if cg is not None else 0) + len(live)
     assert n_sources <= 2, (cg, live)
+
+    # every source is read with its manifest schema: assembling the base
+    # launches no Spark job (footer inference would run one per table)
+    sc = spark.sparkContext
+    sc.setJobGroup("stream-base-tables", "assemble the stream base")
+    try:
+        _base_tables(spark, state, gen)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("stream-base-tables") == []
 
     full = run_dedup(
         spark,
@@ -169,7 +179,10 @@ def test_stream_resumes_legacy_state_without_keys(
     """r3 ADVICE #2: a state dir written before the ``keys`` stage existed
     (no keys.parquet in any generation) must still resume — _base_tables
     omits the table and the incremental run re-derives base keys from
-    features — and the post-resume assignments must equal a full run."""
+    features — and the post-resume assignments must equal a full run.
+    Likewise a compacted snapshot written before compaction committed
+    through StageStore (no ``_manifests``): its tables are read by
+    inference, and reading them creates nothing on disk."""
     import shutil
 
     from sift_kg_spark.fixtures import generate_corpus
@@ -177,36 +190,17 @@ def test_stream_resumes_legacy_state_without_keys(
 
     pages_pdf = generate_corpus(120, seed=47)[0].drop(columns=["true_text"])
     wd = tmp_path_factory.mktemp("stream_legacy")
-    state = os.path.join(str(wd), "state")
-    os.makedirs(state, exist_ok=True)
-
     n_batches = 3
-    for i in range(n_batches - 1):
+
+    def batch(state, i, compact_every):
         process_batch(
             spark,
             spark.createDataFrame(pages_pdf.iloc[i::n_batches]),
             state,
             cfg,
             batch_id=i,
-            compact_every=0,
+            compact_every=compact_every,
         )
-    # simulate legacy state: strip keys.parquet from every generation
-    stripped = 0
-    for g in range(n_batches - 1):
-        p = os.path.join(state, f"gen={g}", "keys.parquet")
-        if os.path.exists(p):
-            shutil.rmtree(p)
-            stripped += 1
-    assert stripped > 0, "fixture must actually remove key snapshots"
-
-    process_batch(
-        spark,
-        spark.createDataFrame(pages_pdf.iloc[n_batches - 1 :: n_batches]),
-        state,
-        cfg,
-        batch_id=n_batches - 1,
-        compact_every=0,
-    )
 
     full = run_dedup(
         spark,
@@ -215,10 +209,41 @@ def test_stream_resumes_legacy_state_without_keys(
         workdir=os.path.join(str(wd), "full"),
     )
     want = _amap(full.assignments)
-    got = _amap(read_assignments(spark, state))
-    assert set(got) == set(want)
-    mism = {u: (got[u], want[u]) for u in want if got[u] != want[u]}
-    assert not mism, f"{len(mism)} mismatches, e.g. {list(mism.items())[:3]}"
+
+    def assert_full(state):
+        got = _amap(read_assignments(spark, state))
+        assert set(got) == set(want)
+        mism = {u: (got[u], want[u]) for u in want if got[u] != want[u]}
+        assert not mism, f"{len(mism)} mismatches, e.g. {list(mism.items())[:3]}"
+
+    # case 1: no keys.parquet in any generation
+    state = os.path.join(str(wd), "state")
+    os.makedirs(state, exist_ok=True)
+    for i in range(n_batches - 1):
+        batch(state, i, compact_every=0)
+    stripped = 0
+    for g in range(n_batches - 1):
+        p = os.path.join(state, f"gen={g}", "keys.parquet")
+        if os.path.exists(p):
+            shutil.rmtree(p)
+            stripped += 1
+    assert stripped > 0, "fixture must actually remove key snapshots"
+    batch(state, n_batches - 1, compact_every=0)
+    assert_full(state)
+
+    # case 2: a compacted snapshot without manifests
+    state = os.path.join(str(wd), "state_compacted")
+    os.makedirs(state, exist_ok=True)
+    for i in range(n_batches - 1):
+        batch(state, i, compact_every=2)
+    compacted = os.path.join(state, "compact=1")
+    manifests = os.path.join(compacted, "_manifests")
+    assert os.path.isdir(manifests), "compaction must commit through StageStore"
+    shutil.rmtree(manifests)
+    batch(state, n_batches - 1, compact_every=2)
+    assert latest_generation(state) == n_batches - 1
+    assert_full(state)
+    assert not os.path.exists(manifests), "reading state must not write"
 
 
 def test_stream_rejects_corpus_stateful_tiers(spark, tmp_path_factory):
