@@ -103,6 +103,8 @@ def _replicate_documents(factor: int, outdir: str) -> None:
             w: (vocab[perm[i]] + (f"r{r}" if (i + r) % 2 == 0 else ""))
             for i, w in enumerate(vocab)
         }
+        # injective, or a tagged word could collide with an untagged one
+        assert len(set(mapping.values())) == len(vocab), r
         texts = [
             " ".join(mapping.get(w, w) for w in t.split(" "))
             for t in rep["text"].tolist()

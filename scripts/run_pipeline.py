@@ -51,6 +51,7 @@ def main(argv: list[str] | None = None) -> int:
 
     from sift_kg_spark.config import DedupConfig
     from sift_kg_spark.pipeline import run_dedup
+    from sift_kg_spark.session import SESSION_CONF
 
     overrides = {}
     if args.shingle_k is not None:
@@ -84,6 +85,7 @@ def main(argv: list[str] | None = None) -> int:
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.showConsoleProgress", "false")
+        .config(map=SESSION_CONF)
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("WARN")

@@ -21,8 +21,18 @@ Everything is pyspark.sql DataFrame + vectorized pandas/Arrow UDFs; no
 row-at-a-time Python UDFs, no RDD code paths in the pipeline.
 """
 
+from pyspark import SparkFiles
+
 from sift_kg_spark.config import DedupConfig
 from sift_kg_spark.session import get_spark
+
+if SparkFiles._is_running_on_worker:
+    # Every engine UDF unpickles in a Python worker by importing this
+    # package, after pyspark's per-task set-up has set the flag; the
+    # Spark driver process is never patched.
+    from sift_kg_spark import _worker
+
+    _worker.install()
 
 __all__ = ["DedupConfig", "get_spark"]
 

@@ -77,6 +77,14 @@ def exact_representatives(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
     never exchanges, and AQE broadcasts the dup-group table when it is
     small (falling back to a shuffle join for pathological corpora that
     are mostly exact duplicates).
+
+    Contract: ``url`` is unique within ``docs`` (one call's documents).
+    The caller of ``run_dedup`` guarantees it for ``pages`` (with
+    ``capture_dedup`` on, ``latest_captures`` keeps one row per canonical
+    url); the append path drops batch urls already in the base, and the
+    batch's own urls are its caller's. Nothing here checks it, since a
+    check would cost a Spark job per call: two rows sharing a url and a
+    text both survive as representatives (both equal the group's min url).
     """
     group_cols = ["sha", "lang"] if cfg.partition_by_lang else ["sha"]
     dup_groups = (

@@ -70,6 +70,28 @@ def _default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
     return "24g" if mb >= _DRIVER_MEM_CAP_MB else f"{mb}m"
 
 
+# Static conf every launch mode applies when it builds the session:
+# ``get_spark`` and ``scripts/run_pipeline.py`` (spark-submit). A static
+# SQL conf is fixed when the JVM's session starts, so it cannot be set
+# from ``__spark_entry__.entry(spark)``, which receives a session its
+# caller has already built.
+#
+# spark.sql.codegen.cache.maxEntries (default 100): one pipeline call
+# needs more distinct generated sources than that, so the LRU evicted
+# every entry before its next use and each warm call recompiled ~135
+# sources with Janino (and HotSpot re-JIT-compiled the fresh classes).
+# Janino compilations per call from an empty cache (local[2], 2 shuffle
+# partitions, dedupbench near_dup_dense seed 1): run_dedup 139 under the
+# default config, 153 under capture_dedup, 166 under span_dedup
+# (long_pages 138, the 400-page test corpus 135); run_dedup_incremental
+# of a 5% batch 273; one process_batch generation 272. 2000 is > 7x the
+# largest, and holds the union of those calls. After one run_dedup the
+# cache holds 300 generated classes, 0.6 MB of bytecode (940 classes,
+# 2.1 MB after a base run and its append), so 2000 entries stay near
+# 10 MB.
+SESSION_CONF = {"spark.sql.codegen.cache.maxEntries": "2000"}
+
+
 def get_spark(
     app_name: str = "sift_kg_spark",
     cores: int | None = None,
@@ -161,6 +183,7 @@ def get_spark(
         # leaving shuffles there serializes every core behind one slow
         # writeback path. tmpfs is the honest per-node-scratch analog.
         .config("spark.local.dir", _local_scratch_dir())
+        .config(map=SESSION_CONF)
     )
     if not os.environ.get("SPARK_GRAFT_KEEP_MASTER"):
         builder = builder.master(master)

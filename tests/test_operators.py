@@ -47,6 +47,17 @@ class TestExactStage:
         reps = exact_representatives(docs, CFG)
         assert {r.url for r in reps.collect()} == {"u1", "u3"}
 
+    def test_representatives_duplicate_url_is_callers_contract(self, spark):
+        # urls are unique per call by contract (see exact_representatives);
+        # a planted duplicate url with identical text is not collapsed
+        docs = _docs(
+            spark,
+            [("u1", "en", "x"), ("u1", "en", "x"), ("u2", "en", "x"),
+             ("u3", "en", "y")],
+        ).withColumn("sha", F.sha2("text_norm", 256))
+        reps = exact_representatives(docs, CFG)
+        assert sorted(r.url for r in reps.collect()) == ["u1", "u1", "u3"]
+
 
 class TestCandidatePairs:
     # packed keys: channel tag in the low 2 bits (0=minhash, 1=simchunk,

@@ -230,3 +230,23 @@ class TestJobBudget:
             sc.statusTracker().getJobIdsForGroup("append-job-budget")
         )
         assert 0 < n_jobs <= self.APPEND_JOB_BUDGET, n_jobs
+
+
+class TestCodegenCache:
+    # A warm call finds every generated source in Spark's codegen cache.
+    # Under the default 100-entry cache the LRU evicted each of a call's
+    # ~135 sources before its next use, so every repeat call recompiled
+    # them all (129 Janino compilations on the second call here). AQE can
+    # number a call's codegen stages in another order, which adds 2-4
+    # variant sources once (seen on the second or third call of a fresh
+    # session), so one of the two warm calls must compile nothing.
+    def test_warm_call_compiles_nothing(self, spark, pages_df, cfg, tmp_path):
+        from sift_kg_spark.pipeline import run_dedup
+
+        metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        compiled = []
+        for name in ("first", "second", "third"):
+            before = metrics.METRIC_COMPILATION_TIME().getCount()
+            run_dedup(spark, pages_df, cfg, workdir=str(tmp_path / name))
+            compiled.append(metrics.METRIC_COMPILATION_TIME().getCount() - before)
+        assert min(compiled[1:]) == 0, compiled
