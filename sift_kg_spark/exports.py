@@ -17,7 +17,6 @@ driver-side materializer and guards itself with a hard row cap.
 
 from __future__ import annotations
 
-import glob
 import os
 
 from pyspark.sql import DataFrame
@@ -286,10 +285,3 @@ def read_csv_export(spark, path: str) -> DataFrame:
     """Round-trip reader for export_csv output (schema inferred)."""
     return spark.read.option("header", "true").option("inferSchema", "true").csv(path)
 
-
-def single_csv_path(path: str) -> str:
-    """The one part file of a single_file=True export."""
-    parts = sorted(glob.glob(os.path.join(path, "part-*.csv")))
-    if len(parts) != 1:
-        raise ValueError(f"expected exactly one part in {path}, got {parts}")
-    return parts[0]

@@ -4,29 +4,29 @@ The reference re-runs its resolve loop over the whole graph whenever new
 documents arrive (/root/reference/src/sift_kg/resolve/engine.py:11-137 —
 iterative full-graph passes). At crawl scale that is untenable: a daily
 batch must cost O(batch), not O(corpus). This module implements the
-append workflow against a completed base run's snapshot directory:
+append workflow against a completed base run's snapshot directory. It
+reads the base, runs the corpus-stateful tiers' prelude
+(``_tier_prelude``), then runs the full run's stages
+(``pipeline._run_stages``) on the batch; each step below is the base arm
+of one of them:
 
-  1. prepare the new batch (same extraction/normalization/quarantine);
-     re-key any doc_uid colliding with the base corpus;
-  2. exact stage: new shas join base representatives; star edges within
-     new-only sha groups;
-  3. signatures computed ONLY for new distinct texts — base signatures
-     are read back from the base feature snapshot, never recomputed;
-  4. candidate generation reads the base run's committed exploded-key
-     snapshot (pipeline "keys" stage) and semi-joins it against the
-     batch's distinct keys — only buckets touched by >= 1 new key enter
-     the exchange, so base-side SHUFFLE volume is O(touched buckets), not
-     O(corpus keys), and base features are never re-exploded
-     (operators/lsh.candidate_pairs_incremental pairs them);
-  5. verify/suffix on the new pairs only; the base-side feature/text/url
-     lookups are all (broadcast batch-uid-set) semi-joins against the base
-     snapshots — narrow columnar scans, zero base-side shuffles;
-  6. clustering by CONTRACTION: base clusters enter the component graph
-     as single supernodes (their cluster_id IS their min-url label), new
-     confirmed edges connect supernodes and new docs, and connected
-     components runs over this contracted graph — orders of magnitude
-     smaller than the corpus. Untouched base clusters are carried over
-     without rewriting; only merged clusters recompute the A1 canonical.
+  1. ``prepared``: re-delivered urls drop; doc_uids colliding with the
+     base corpus re-key (``batch_prepared``);
+  2. ``exact_pairs``: new shas join base representatives;
+  3. ``features``: signatures ONLY for new distinct texts — base
+     signatures are read back, never recomputed;
+  4. ``candidates``: only the base keys in buckets a batch key touches
+     enter the exchange (``incremental_candidates``);
+  5. ``verified`` / ``spans`` / ``dup_pairs``: base features, texts and
+     urls pruned to the uids the new pairs name (broadcast semi-joins,
+     no base-side shuffle), plus the rewritten evidence of tombstoned
+     docs (``rewritten_evidence``);
+  6. ``assignments_delta``: clustering by CONTRACTION
+     (``build_assignments_delta``): base clusters enter the component
+     graph as single supernodes, so connected components runs over a
+     graph orders of magnitude smaller than the corpus. Untouched base
+     clusters are carried over without rewriting; only merged clusters
+     recompute the A1 canonical.
 
 Cost model per batch: every base-side access is either a broadcast
 semi/anti join (narrow scan, no exchange) or a broadcast hash join whose
@@ -82,27 +82,22 @@ spans would need a full O(corpus-tokens) inverted index (§6.3).
 
 from __future__ import annotations
 
-from dataclasses import replace
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sift_kg_spark.config import DEFAULT_CONFIG, DedupConfig
 from sift_kg_spark.functions.features import FEATURE_BASE_DTYPES
 from sift_kg_spark.operators.components import connected_components
-from sift_kg_spark.operators.exact import exact_dup_pairs, exact_representatives
 from sift_kg_spark.operators.lsh import candidate_pairs_incremental, explode_keys
-from sift_kg_spark.operators.verify import verify_pairs
 from sift_kg_spark.pipeline import (
     PAIR_COLUMNS,
+    BaseViews,
     DedupResult,
-    cluster_table,
+    _committer,
+    _run_stages,
     featurize,
     prepare_docs,
-    prepare_stage,
     run_context,
-    scored_pairs,
-    span_scores,
     with_canonical,
 )
 from sift_kg_spark.tableio import StageStore
@@ -175,15 +170,6 @@ def fold_assignments_delta(combined: DataFrame, delta: DataFrame) -> DataFrame:
     )
 
 
-def _pair_uids(pairs: DataFrame) -> DataFrame:
-    """The distinct ``doc_uid``s named by ``pairs(uid_a, uid_b)``."""
-    return (
-        pairs.select(F.col("uid_a").alias("doc_uid"))
-        .unionByName(pairs.select(F.col("uid_b").alias("doc_uid")))
-        .distinct()
-    )
-
-
 def check_base_features_schema(base_features: DataFrame) -> None:
     """Reject a base feature snapshot written under another format.
 
@@ -235,113 +221,25 @@ def incremental_candidates(
     )
 
 
-def run_dedup_incremental(
-    spark: SparkSession,
+def _tier_prelude(
     new_pages: DataFrame,
-    cfg: DedupConfig = DEFAULT_CONFIG,
-    base_workdir: str | None = None,
-    workdir: str | None = None,
-    resume: bool = True,
-    base_tables: dict[str, DataFrame] | None = None,
-    materialize_assignments: bool = True,
-) -> DedupResult:
-    """Dedup an append batch against a completed base run.
+    cfg: DedupConfig,
+    base_tables: dict[str, DataFrame],
+    commit,
+) -> tuple[DataFrame, BaseViews]:
+    """Section 0 of an append: the corpus-stateful tiers' decisions.
 
-    ``base_workdir``: snapshot dir of the base :func:`run_dedup` run
-    (read-only here); every committed stage of :data:`BASE_STAGES` is read
-    with its manifest schema. Alternatively ``base_tables`` supplies the
-    same dict directly ({"prepared", "features", "assignments"} required,
-    the rest optional) — the streaming wrapper uses this to present a
-    UNION of per-batch generation tables without ever rewriting them.
-    ``workdir``: snapshot dir for this increment's own stages. Returns a
-    :class:`DedupResult` whose ``assignments`` / ``clusters`` cover the
-    COMBINED corpus (base + batch) and whose ``dup_pairs`` /
-    ``review_pairs`` carry only the new evidence.
-
-    ``materialize_assignments``: when True (default, the one-shot append
-    workflow) the combined assignments/clusters tables are committed to
-    ``workdir`` like every other stage. When False (the streaming
-    wrapper) only the O(touched-clusters) ``assignments_delta`` stage is
-    written; the returned combined tables are lazy views over
-    base ∪ delta, and the per-generation write volume is bounded by the
-    batch's blast radius instead of the corpus.
-    """
-    check_tiers_compose(cfg)
-    if base_tables is None:
-        if base_workdir is None:
-            raise ValueError(
-                "run_dedup_incremental requires base_workdir or base_tables"
-            )
-        base = StageStore(spark, base_workdir, context=run_context(cfg))
-        for required in ("prepared", "features", "assignments"):
-            if not base.exists(required):
-                raise ValueError(
-                    f"base run at {base_workdir} lacks committed stage "
-                    f"'{required}' (or was produced under a different config)"
-                )
-        base_tables = {
-            name: base.read(name) for name in BASE_STAGES if base.exists(name)
-        }
+    Returns the effective batch and the base views without the base docs
+    the tiers kill. ``commit`` is the stage commit of the append
+    (``pipeline._committer``); ``base_tables`` holds a ``keys`` table."""
     base_prepared = base_tables["prepared"]
     base_features = base_tables["features"]
-    base_assign = base_tables["assignments"]
-    base_keys = base_tables.get("keys")
+    base_keys = base_tables["keys"]
     base_captures = base_tables.get("captures")
     base_pairs = base_tables.get("dup_pairs")
     base_extracted = base_tables.get("extracted")
     base_chunk_counts = base_tables.get("chunk_counts")
     base_chunk_docs = base_tables.get("chunk_docs")
-    if cfg.capture_dedup and (base_captures is None or base_pairs is None):
-        raise ValueError(
-            "capture_dedup in incremental mode needs the base run's "
-            "'captures' and 'dup_pairs' snapshots (a capture_dedup=True "
-            "run_dedup with a workdir commits both); the supplied base "
-            "lacks them"
-        )
-    if cfg.span_dedup and (
-        base_extracted is None
-        or base_chunk_counts is None
-        or base_chunk_docs is None
-        or base_pairs is None
-    ):
-        raise ValueError(
-            "span_dedup in incremental mode needs the base run's "
-            "'extracted', 'chunk_counts', 'chunk_docs' and 'dup_pairs' "
-            "snapshots — the span tier's storage switch (a "
-            "span_dedup=True run_dedup with a workdir commits all four; "
-            "see docs/ICEBERG.md §6.2); the supplied base lacks them"
-        )
-    check_base_features_schema(base_features)
-    if base_keys is None:
-        # pre-"keys"-stage base (or hand-assembled base_tables): derive the
-        # key table once from the base features — the one path that still
-        # re-explodes the base; committed bases never take it.
-        base_keys = explode_keys(
-            base_features.select("doc_uid", "lang", "keys"), cfg
-        )
-
-    store = (
-        StageStore(
-            spark, workdir, context={**run_context(cfg), "base": base_workdir}
-        )
-        if workdir
-        else None
-    )
-
-    def commit(name: str, build, inputs: tuple[str, ...] = ()) -> DataFrame:
-        if store is None:
-            # localCheckpoint (lazy), not bare persist: the increment's
-            # stages reference base/batch subtrees many times over
-            # (broadcast uid/key/url sets), and without per-stage PLAN
-            # truncation Catalyst re-analyzes the exponentially nested
-            # lineage on every downstream Dataset build — minutes of
-            # driver time before any job runs. Blocks are stored
-            # MEMORY_AND_DISK either way; a workdir store gets the same
-            # truncation from its parquet round-trip.
-            return build().localCheckpoint(eager=False)
-        return store.stage(name, build, inputs=inputs, resume=resume)
-
-    n_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     group_cols = ["sha", "lang"] if cfg.partition_by_lang else ["sha"]
 
     # ---- 0. corpus-stateful tiers: supersede/re-clean decisions ------------
@@ -626,429 +524,371 @@ def run_dedup_incremental(
             F.broadcast(tomb_uids), "doc_uid", "leftanti"
         ).unionByName(keys_rehomed)
 
-    base_docs = base_prepared.filter(F.col("reason").isNull())
-
-    # ---- 1. prepare + base-collision rescue --------------------------------
-    def build_prepared() -> DataFrame:
-        # checkpoint the extracted batch once: it feeds the main plan plus
-        # two broadcast probe sets below, and the pandas-UDF extraction
-        # chain should run once per batch, not once per reference.
-        # In span mode the text was already extracted AND cleaned against
-        # the merged vocabulary in section 0, so prepare runs with the
-        # span tier off — batch-local re-cleaning would diverge from the
-        # full-run contract.
-        prep_cfg = (
-            replace(cfg, span_dedup=False) if cfg.span_dedup else cfg
-        )
-        inc = prepare_stage(new_pages, prep_cfg, n_partitions).localCheckpoint(
-            eager=False
-        )
-        if not cfg.capture_dedup:
-            # Idempotent re-delivery: urls already in the base corpus are
-            # not re-deduped (the base decision stands). The redelivered
-            # set is found by streaming the base url column against the
-            # BROADCAST batch url set (narrow base scan, no exchange),
-            # then anti-joining the tiny hit set back — the batch side is
-            # small by definition; the base side never shuffles. (In
-            # capture mode the supersede logic above IS the idempotency
-            # rule: a re-delivered capture ties its own base row and
-            # loses, and a same-url re-CRAWL legitimately replaces it.
-            # In span mode the batch was already redelivery-filtered in
-            # section 0; re-cleaned base docs pass here BECAUSE the base
-            # view is tombstone-filtered — their old rows are gone.)
-            url_hits = base_prepared.select("url").join(
-                F.broadcast(inc.select("url").distinct()), "url", "leftsemi"
-            )
-            inc = inc.join(F.broadcast(url_hits), "url", "leftanti")
-        # uid uniqueness must hold across base ∪ batch: within-batch
-        # collisions were rescued inside prepare_stage; cross-base ones
-        # re-key here. Same pattern: narrow base uid scan vs broadcast
-        # batch uid set -> tiny collision table -> broadcast back.
-        uid_hits = (
-            base_prepared.select("doc_uid")
-            .join(
-                F.broadcast(inc.select("doc_uid").distinct()),
-                "doc_uid",
-                "leftsemi",
-            )
-            .withColumn("_in_base", F.lit(True))
-        )
-        return (
-            inc.join(F.broadcast(uid_hits), "doc_uid", "left")
-            .withColumn(
-                "doc_uid",
-                F.when(
-                    F.col("_in_base").isNotNull(),
-                    F.xxhash64("url", F.lit("#uid-rekey-base")),
-                ).otherwise(F.col("doc_uid")),
-            )
-            .drop("_in_base")
-        )
-
-    prepared = commit("prepared", build_prepared, ("pages",))
-    docs = prepared.filter(F.col("reason").isNull()).drop("reason")
-    quarantine = prepared.filter(F.col("reason").isNotNull()).select(
-        "url", "lang", "reason"
+    return new_pages, BaseViews(
+        prepared=base_prepared,
+        features=base_features,
+        keys=base_keys,
+        assignments=base_tables["assignments"],
+        pairs=base_pairs,
+        tombstones=tombstones,
+        rewrite_map=rewrite_map,
     )
 
-    # ---- 2. exact: within-batch stars + cross-base attachment --------------
-    def build_exact() -> DataFrame:
-        within = exact_dup_pairs(docs, cfg)
-        new_shas = docs.select(*group_cols).distinct()
-        base_reps = (
-            base_docs.join(F.broadcast(new_shas), on=group_cols, how="leftsemi")
-            .groupBy(*group_cols)
-            .agg(F.min("url").alias("rep_url"))
-        )
-        cross = (
-            docs.select("url", *group_cols)
-            .join(F.broadcast(base_reps), on=group_cols, how="inner")
-            .select(
-                F.col("url").alias("url_a"),
-                F.col("rep_url").alias("url_b"),
-                F.lit("exact").alias("channel"),
-                F.lit(1.0).alias("jaccard"),
-            )
-        )
-        return within.unionByName(cross)
 
-    exact_pairs = commit("exact_pairs", build_exact, ("prepared",))
-
-    # ---- 3. signatures for genuinely new texts only ------------------------
-    def build_features() -> DataFrame:
-        # One representative per NEW distinct sha — "seen in base" means a
-        # NON-quarantined base row carries it: a sha whose only base
-        # occurrences were quarantined has no base signature and no base
-        # cluster to attach to, so the new doc must be featured itself
-        # (full-run parity for the raw-short/normalized-same edge case).
-        # Base shas intersecting the batch are found narrowly (broadcast
-        # batch-sha set), then anti-joined back — the base sha column is
-        # scanned once, never shuffled.
-        batch_shas = docs.select(*group_cols).distinct()
-        base_sha_hits = (
-            base_docs.select(*group_cols)
-            .join(F.broadcast(batch_shas), on=group_cols, how="leftsemi")
-            .distinct()
+def batch_prepared(
+    prepared: DataFrame, base_prepared: DataFrame, cfg: DedupConfig
+) -> DataFrame:
+    """The batch's ``prepared`` rows against the base: re-delivered urls
+    dropped, and doc_uids that collide with a base uid re-keyed."""
+    # checkpoint the extracted batch once: it feeds the main plan plus
+    # two broadcast probe sets below, and the pandas-UDF extraction
+    # chain should run once per batch, not once per reference.
+    inc = prepared.localCheckpoint(eager=False)
+    if not cfg.capture_dedup:
+        # Idempotent re-delivery: urls already in the base corpus are
+        # not re-deduped (the base decision stands). The redelivered
+        # set is found by streaming the base url column against the
+        # BROADCAST batch url set (narrow base scan, no exchange),
+        # then anti-joining the tiny hit set back — the batch side is
+        # small by definition; the base side never shuffles. (In
+        # capture mode the supersede logic above IS the idempotency
+        # rule: a re-delivered capture ties its own base row and
+        # loses, and a same-url re-CRAWL legitimately replaces it.
+        # In span mode the batch was already redelivery-filtered in
+        # section 0; re-cleaned base docs pass here BECAUSE the base
+        # view is tombstone-filtered — their old rows are gone.)
+        url_hits = base_prepared.select("url").join(
+            F.broadcast(inc.select("url").distinct()), "url", "leftsemi"
         )
-        new_only = docs.join(
-            F.broadcast(base_sha_hits), on=group_cols, how="leftanti"
+        inc = inc.join(F.broadcast(url_hits), "url", "leftanti")
+    # uid uniqueness must hold across base ∪ batch: within-batch
+    # collisions were rescued inside prepare_stage; cross-base ones
+    # re-key here. Same pattern: narrow base uid scan vs broadcast
+    # batch uid set -> tiny collision table -> broadcast back.
+    uid_hits = (
+        base_prepared.select("doc_uid")
+        .join(
+            F.broadcast(inc.select("doc_uid").distinct()),
+            "doc_uid",
+            "leftsemi",
         )
-        return featurize(exact_representatives(new_only, cfg), cfg)
-
-    features = commit("features", build_features, ("prepared",))
-
-    # batch-only key snapshot: committed so chained increments (streaming
-    # generations) semi-join it instead of re-exploding this batch later.
-    keys_new = commit(
-        "keys", lambda: explode_keys(features, cfg), ("features",)
+        .withColumn("_in_base", F.lit(True))
+    )
+    return (
+        inc.join(F.broadcast(uid_hits), "doc_uid", "left")
+        .withColumn(
+            "doc_uid",
+            F.when(
+                F.col("_in_base").isNotNull(),
+                F.xxhash64("url", F.lit("#uid-rekey-base")),
+            ).otherwise(F.col("doc_uid")),
+        )
+        .drop("_in_base")
     )
 
-    # ---- 4. candidates over buckets touched by new keys --------------------
-    candidates = commit(
-        "candidates",
-        lambda: incremental_candidates(keys_new, base_keys, cfg),
-        ("keys",),
-    )
 
-    # ---- 5. verify + suffix: base lookups pruned to candidate uids ---------
-    feat_cols = ["doc_uid", "shingles", "simhash"]
-
-    def build_verified() -> DataFrame:
-        base_needed = base_features.select(*feat_cols).join(
-            F.broadcast(_pair_uids(candidates)), "doc_uid", "leftsemi"
-        )
-        features_all = features.select(*feat_cols).unionByName(base_needed)
-        return verify_pairs(candidates, features_all, cfg)
-
-    verified = commit(
-        "verified", build_verified, ("candidates", "features")
-    )
-
-    def build_spans() -> DataFrame:
-        flagged = verified.filter(F.col("status") == "flagged")
-        base_texts = base_docs.select("doc_uid", "text_norm").join(
-            F.broadcast(_pair_uids(flagged)), "doc_uid", "leftsemi"
-        )
-        texts = docs.select("doc_uid", "text_norm").unionByName(base_texts)
-        return span_scores(verified, texts, cfg, n_partitions)
-
-    spans = commit("spans", build_spans, ("verified", "prepared"))
-
-    # ---- 6. new evidence table (url-named) ---------------------------------
-    def build_pairs() -> DataFrame:
-        base_urls = base_prepared.select("doc_uid", "url").join(
-            F.broadcast(_pair_uids(verified)), "doc_uid", "leftsemi"
-        )
-        urls = docs.select("doc_uid", "url").unionByName(base_urls)
-        out = scored_pairs(verified, spans, exact_pairs, urls, cfg)
-        if rewrite_map is not None:
-            # Re-attribute stored evidence that named a dead doc
-            # (superseded capture or span re-clean):
-            # (dead, x) rewrites to (repl, x) — identical text, so every
-            # score/status carries over verbatim; pairs whose dead side
-            # has no surviving same-sha doc die with it; rewrites that
-            # collapse both ends onto one doc become self-loops and drop.
-            # Committing the rewritten rows here keeps the evidence
-            # readable by future generations after the tombstone filter
-            # hides the originals. One narrow scan of the base pair
-            # table against the broadcast (batch-scale) rewrite map.
-            rm = rewrite_map.select("dead_url", "repl_url")
-            pa = base_pairs.join(
-                F.broadcast(
-                    rm.select(
-                        F.col("dead_url").alias("url_a"),
-                        F.col("repl_url").alias("_ra"),
-                        F.lit(True).alias("_da"),
-                    )
-                ),
-                "url_a",
-                "left",
-            )
-            pab = pa.join(
-                F.broadcast(
-                    rm.select(
-                        F.col("dead_url").alias("url_b"),
-                        F.col("repl_url").alias("_rb"),
-                        F.lit(True).alias("_db"),
-                    )
-                ),
-                "url_b",
-                "left",
-            )
-            touched = pab.filter(
-                F.col("_da").isNotNull() | F.col("_db").isNotNull()
-            )
-            ok = touched.filter(
-                (F.col("_da").isNull() | F.col("_ra").isNotNull())
-                & (F.col("_db").isNull() | F.col("_rb").isNotNull())
-            )
-            rewritten = (
-                ok.withColumn("_na", F.coalesce("_ra", F.col("url_a")))
-                .withColumn("_nb", F.coalesce("_rb", F.col("url_b")))
-                .filter(F.col("_na") != F.col("_nb"))
-                .withColumn("url_a", F.least("_na", "_nb"))
-                .withColumn("url_b", F.greatest("_na", "_nb"))
-                .select(*PAIR_COLUMNS)
-                .dropDuplicates(PAIR_COLUMNS)
-            )
-            out = out.unionByName(rewritten)
-        return out
-
-    dup_pairs = commit("dup_pairs", build_pairs, ("verified", "spans", "exact_pairs"))
-    review_pairs = dup_pairs.filter(F.col("status") == "flagged")
-
-    # ---- 7. contracted clustering ------------------------------------------
-    def build_assignments_delta() -> DataFrame:
-        edges = dup_pairs.filter(F.col("status") == "confirmed").select(
-            "url_a", "url_b"
-        )
-        # Capture repair: any base cluster that lost a member to a
-        # tombstone re-enters connected components at MEMBER level — its
-        # old label may be the dead doc's url, and removing a bridge doc
-        # can legitimately SPLIT it — with its surviving internal
-        # evidence. Edges incident to the dead doc arrive as the
-        # REWRITTEN rows already in dup_pairs; the untouched live-live
-        # edges are pulled from the base pair table here (one narrow
-        # scan against the blast-radius member set).
-        dead_clusters = live_members = None
-        if tombstones is not None:
-            dead_urls_df = tombstones.select("url")
-            dead_clusters = (
-                base_assign.join(F.broadcast(dead_urls_df), "url", "leftsemi")
-                .select("cluster_id")
-                .distinct()
-            )
-            dead_members = base_assign.join(
-                F.broadcast(dead_clusters), "cluster_id", "leftsemi"
-            )
-            live_members = dead_members.join(
-                F.broadcast(dead_urls_df), "url", "leftanti"
-            ).localCheckpoint(eager=False)
-            internal = (
-                base_pairs.filter(F.col("status") == "confirmed")
-                .select("url_a", "url_b")
-                # confirmed edges never cross clusters, so membership of
-                # one endpoint implies the pair belongs to the cluster
-                .join(
-                    live_members.select(F.col("url").alias("url_a")),
-                    "url_a",
-                    "leftsemi",
-                )
-                .join(
-                    F.broadcast(
-                        dead_urls_df.select(F.col("url").alias("url_a"))
-                    ),
-                    "url_a",
-                    "leftanti",
-                )
-                .join(
-                    F.broadcast(
-                        dead_urls_df.select(F.col("url").alias("url_b"))
-                    ),
-                    "url_b",
-                    "leftanti",
-                )
-            )
-            edges = edges.unionByName(internal)
-        # contract base clusters to their cluster_id supernode (the label
-        # IS the cluster's min url, so min-label CC composes globally).
-        # Only urls that appear in a new edge need their supernode lookup:
-        # prune the assignment map to the (tiny) edge-url set first, then
-        # broadcast it into the left joins — the base assignment table is
-        # scanned narrowly, never shuffled. Dead-touched clusters are
-        # EXCLUDED from contraction (their members stay member-level).
-        edge_urls = (
-            edges.select(F.col("url_a").alias("url"))
-            .unionByName(edges.select(F.col("url_b").alias("url")))
-            .distinct()
-        )
-        node_src = base_assign.select("url", "cluster_id")
-        if tombstones is not None:
-            node_src = node_src.join(
-                F.broadcast(dead_clusters), "cluster_id", "leftanti"
-            )
-        node_of = node_src.select(
-            "url", F.col("cluster_id").alias("node")
-        ).join(F.broadcast(edge_urls), "url", "leftsemi")
-        contracted = (
-            edges.join(
-                F.broadcast(
-                    node_of.withColumnRenamed("url", "url_a").withColumnRenamed(
-                        "node", "_na"
-                    )
-                ),
-                "url_a",
-                "left",
-            )
-            .join(
-                F.broadcast(
-                    node_of.withColumnRenamed("url", "url_b").withColumnRenamed(
-                        "node", "_nb"
-                    )
-                ),
-                "url_b",
-                "left",
-            )
-            .select(
-                F.coalesce("_na", "url_a").alias("url_a"),
-                F.coalesce("_nb", "url_b").alias("url_b"),
-            )
-            .filter(F.col("url_a") != F.col("url_b"))
-        )
-        merged = connected_components(contracted, cfg.max_cc_iterations)
-        # merged: (url=supernode-or-member-or-new-url, cluster_id=label)
-
-        # members of every affected SUPERNODE cluster, with n_chars for
-        # the A1 rule. The label map is restricted to actual supernode
-        # ids (node_of's node values — batch-scale by construction), so
-        # the broadcast stays safe even when capture repair makes
-        # ``merged`` blast-radius-sized, and a member url that happens to
-        # EQUAL a dead cluster's id can never re-import that cluster.
-        super_ids = node_of.select(F.col("node").alias("url")).distinct()
-        label_map = merged.join(F.broadcast(super_ids), "url", "leftsemi")
-        affected_base = base_assign.join(
+def rewritten_evidence(
+    base_pairs: DataFrame, rewrite_map: DataFrame
+) -> DataFrame:
+    """Base pair evidence that named a dead doc, re-attributed through
+    ``rewrite_map(dead_url, repl_url)``."""
+    # A dead doc is a superseded capture or a span re-clean. (dead, x)
+    # rewrites to (repl, x) — identical text, so every score/status
+    # carries over verbatim; pairs whose dead side has no surviving
+    # same-sha doc die with it; rewrites that collapse both ends onto one
+    # doc become self-loops and drop. Committing the rewritten rows with
+    # the batch's dup_pairs keeps the evidence readable by future
+    # generations after the tombstone filter hides the originals. One
+    # narrow scan of the base pair table against the broadcast
+    # (batch-scale) rewrite map.
+    rm = rewrite_map.select("dead_url", "repl_url")
+    pab = base_pairs
+    for end in ("a", "b"):
+        pab = pab.join(
             F.broadcast(
-                label_map.select(
-                    F.col("url").alias("cluster_id"),
-                    F.col("cluster_id").alias("_label"),
+                rm.select(
+                    F.col("dead_url").alias(f"url_{end}"),
+                    F.col("repl_url").alias(f"_r{end}"),
+                    F.lit(True).alias(f"_d{end}"),
                 )
             ),
-            "cluster_id",
-        ).select("url", F.col("cluster_id").alias("prev_cluster_id"), "_label")
-        # affected_base is CLUSTER-scale (the full membership of every
-        # base cluster a new edge touched), NOT batch-scale: one new doc
-        # merging into a giant boilerplate cluster makes it that cluster's
-        # size. No broadcast hint here — AQE broadcasts it only when the
-        # measured build side is actually small (r3 ADVICE).
-        base_members = base_prepared.select("url", "n_chars").join(
-            affected_base, "url"
-        ).select(
-            "url", F.col("_label").alias("cluster_id"), "n_chars",
-            "prev_cluster_id",
+            f"url_{end}",
+            "left",
         )
-        label_all = merged.withColumnRenamed("cluster_id", "_label")
-        # capture repair makes ``merged`` blast-radius-sized; drop the
-        # broadcast hint there and let AQE size the join
-        lbl = label_all if tombstones is not None else F.broadcast(label_all)
-        new_members = (
-            docs.select("url", "n_chars")
-            .join(lbl, "url", "left")
+    touched = pab.filter(F.col("_da").isNotNull() | F.col("_db").isNotNull())
+    ok = touched.filter(
+        (F.col("_da").isNull() | F.col("_ra").isNotNull())
+        & (F.col("_db").isNull() | F.col("_rb").isNotNull())
+    )
+    return (
+        ok.withColumn("_na", F.coalesce("_ra", F.col("url_a")))
+        .withColumn("_nb", F.coalesce("_rb", F.col("url_b")))
+        .filter(F.col("_na") != F.col("_nb"))
+        .withColumn("url_a", F.least("_na", "_nb"))
+        .withColumn("url_b", F.greatest("_na", "_nb"))
+        .select(*PAIR_COLUMNS)
+        .dropDuplicates(PAIR_COLUMNS)
+    )
+
+
+def build_assignments_delta(
+    dup_pairs: DataFrame, docs: DataFrame, base: BaseViews, cfg: DedupConfig
+) -> DataFrame:
+    """An append's clustering by contraction (step 6 above): the
+    ``assignments_delta`` of the batch's confirmed edges ``dup_pairs``
+    and its docs ``docs`` against the base."""
+    tombstones = base.tombstones
+    edges = dup_pairs.filter(F.col("status") == "confirmed").select(
+        "url_a", "url_b"
+    )
+    # Capture repair: any base cluster that lost a member to a
+    # tombstone re-enters connected components at MEMBER level — its
+    # old label may be the dead doc's url, and removing a bridge doc
+    # can legitimately SPLIT it — with its surviving internal
+    # evidence. Edges incident to the dead doc arrive as the
+    # REWRITTEN rows already in dup_pairs; the untouched live-live
+    # edges are pulled from the base pair table here (one narrow
+    # scan against the blast-radius member set).
+    dead_clusters = live_members = None
+    if tombstones is not None:
+        dead_urls_df = tombstones.select("url")
+        dead_assigned = base.assignments.join(
+            F.broadcast(dead_urls_df), "url", "leftsemi"
+        )
+        dead_clusters = dead_assigned.select("cluster_id").distinct()
+        dead_members = base.assignments.join(
+            F.broadcast(dead_clusters), "cluster_id", "leftsemi"
+        )
+        live_members = dead_members.join(
+            F.broadcast(dead_urls_df), "url", "leftanti"
+        ).localCheckpoint(eager=False)
+        internal = (
+            base.pairs.filter(F.col("status") == "confirmed")
+            .select("url_a", "url_b")
+            # confirmed edges never cross clusters, so membership of
+            # one endpoint implies the pair belongs to the cluster
+            .join(
+                live_members.select(F.col("url").alias("url_a")),
+                "url_a",
+                "leftsemi",
+            )
+        )
+        for end in ("url_a", "url_b"):
+            internal = internal.join(
+                F.broadcast(dead_urls_df.select(F.col("url").alias(end))),
+                end,
+                "leftanti",
+            )
+        edges = edges.unionByName(internal)
+    # contract base clusters to their cluster_id supernode (the label
+    # IS the cluster's min url, so min-label CC composes globally).
+    # Only urls that appear in a new edge need their supernode lookup:
+    # prune the assignment map to the (tiny) edge-url set first, then
+    # broadcast it into the left joins — the base assignment table is
+    # scanned narrowly, never shuffled. Dead-touched clusters are
+    # EXCLUDED from contraction (their members stay member-level).
+    edge_urls = (
+        edges.select(F.col("url_a").alias("url"))
+        .unionByName(edges.select(F.col("url_b").alias("url")))
+        .distinct()
+    )
+    node_src = base.assignments.select("url", "cluster_id")
+    if tombstones is not None:
+        node_src = node_src.join(
+            F.broadcast(dead_clusters), "cluster_id", "leftanti"
+        )
+    node_of = node_src.select(
+        "url", F.col("cluster_id").alias("node")
+    ).join(F.broadcast(edge_urls), "url", "leftsemi")
+    contracted = edges
+    for end in ("a", "b"):
+        contracted = contracted.join(
+            F.broadcast(
+                node_of.withColumnRenamed("url", f"url_{end}")
+                .withColumnRenamed("node", f"_n{end}")
+            ),
+            f"url_{end}",
+            "left",
+        )
+    contracted = contracted.select(
+        F.coalesce("_na", "url_a").alias("url_a"),
+        F.coalesce("_nb", "url_b").alias("url_b"),
+    ).filter(F.col("url_a") != F.col("url_b"))
+    merged = connected_components(contracted, cfg.max_cc_iterations)
+    # merged: (url=supernode-or-member-or-new-url, cluster_id=label)
+
+    # members of every affected SUPERNODE cluster, with n_chars for
+    # the A1 rule. The label map is restricted to actual supernode
+    # ids (node_of's node values — batch-scale by construction), so
+    # the broadcast stays safe even when capture repair makes
+    # ``merged`` blast-radius-sized, and a member url that happens to
+    # EQUAL a dead cluster's id can never re-import that cluster.
+    super_ids = node_of.select(F.col("node").alias("url")).distinct()
+    label_map = merged.join(F.broadcast(super_ids), "url", "leftsemi")
+    affected_base = base.assignments.join(
+        F.broadcast(
+            label_map.select(
+                F.col("url").alias("cluster_id"),
+                F.col("cluster_id").alias("_label"),
+            )
+        ),
+        "cluster_id",
+    ).select("url", F.col("cluster_id").alias("prev_cluster_id"), "_label")
+    # affected_base is CLUSTER-scale (the full membership of every
+    # base cluster a new edge touched), NOT batch-scale: one new doc
+    # merging into a giant boilerplate cluster makes it that cluster's
+    # size. No broadcast hint here — AQE broadcasts it only when the
+    # measured build side is actually small (r3 ADVICE).
+    base_members = base.prepared.select("url", "n_chars").join(
+        affected_base, "url"
+    ).select(
+        "url", F.col("_label").alias("cluster_id"), "n_chars",
+        "prev_cluster_id",
+    )
+    label_all = merged.withColumnRenamed("cluster_id", "_label")
+    # capture repair makes ``merged`` blast-radius-sized; drop the
+    # broadcast hint there and let AQE size the join
+    lbl = label_all if tombstones is not None else F.broadcast(label_all)
+    new_members = (
+        docs.select("url", "n_chars")
+        .join(lbl, "url", "left")
+        .select(
+            "url",
+            F.coalesce("_label", F.col("url")).alias("cluster_id"),
+            "n_chars",
+            F.lit(None).cast("string").alias("prev_cluster_id"),
+        )
+    )
+    affected = base_members.unionByName(new_members)
+    if tombstones is not None:
+        # surviving members of repaired clusters: CC label when they
+        # kept an edge, singleton (their own url) otherwise — and an
+        # edgeless survivor is still a delta row (its old cluster id
+        # is being dropped). Dead docs themselves become DELETION
+        # rows: cluster_id NULL, prev_cluster_id = the cluster to
+        # drop — the MERGE INTO delete half with nothing re-inserted.
+        dead_rows = (
+            live_members.select(
+                "url", F.col("cluster_id").alias("prev_cluster_id")
+            )
+            .join(label_all, "url", "left")
+            .join(base.prepared.select("url", "n_chars"), "url")
             .select(
                 "url",
                 F.coalesce("_label", F.col("url")).alias("cluster_id"),
                 "n_chars",
-                F.lit(None).cast("string").alias("prev_cluster_id"),
+                "prev_cluster_id",
             )
         )
-        affected = base_members.unionByName(new_members)
-        if tombstones is not None:
-            # surviving members of repaired clusters: CC label when they
-            # kept an edge, singleton (their own url) otherwise — and an
-            # edgeless survivor is still a delta row (its old cluster id
-            # is being dropped). Dead docs themselves become DELETION
-            # rows: cluster_id NULL, prev_cluster_id = the cluster to
-            # drop — the MERGE INTO delete half with nothing re-inserted.
-            dead_rows = (
-                live_members.select(
-                    "url", F.col("cluster_id").alias("prev_cluster_id")
-                )
-                .join(label_all, "url", "left")
-                .join(base_prepared.select("url", "n_chars"), "url")
-                .select(
-                    "url",
-                    F.coalesce("_label", F.col("url")).alias("cluster_id"),
-                    "n_chars",
-                    "prev_cluster_id",
-                )
+        affected = affected.unionByName(dead_rows)
+    out = with_canonical(affected)
+    if tombstones is not None:
+        prev_hits = dead_assigned.select(
+            "url", F.col("cluster_id").alias("prev_cluster_id")
+        )
+        tomb_rows = (
+            dead_urls_df.join(F.broadcast(prev_hits), "url", "left")
+            .select(
+                "url",
+                F.lit(None).cast("string").alias("cluster_id"),
+                F.lit(None).cast("string").alias("canonical_url"),
+                F.lit(None).cast("long").alias("cluster_size"),
+                "prev_cluster_id",
             )
-            affected = affected.unionByName(dead_rows)
-        out = with_canonical(affected)
-        if tombstones is not None:
-            prev_hits = base_assign.join(
-                F.broadcast(tombstones.select("url")), "url", "leftsemi"
-            ).select("url", F.col("cluster_id").alias("prev_cluster_id"))
-            tomb_rows = (
-                tombstones.select("url")
-                .join(F.broadcast(prev_hits), "url", "left")
-                .select(
-                    "url",
-                    F.lit(None).cast("string").alias("cluster_id"),
-                    F.lit(None).cast("string").alias("canonical_url"),
-                    F.lit(None).cast("long").alias("cluster_size"),
-                    "prev_cluster_id",
-                )
-            )
-            out = out.unionByName(tomb_rows)
-        return out
+        )
+        out = out.unionByName(tomb_rows)
+    return out
 
-    # The per-generation WRITE: every member of every touched cluster plus
-    # all new docs — O(batch blast radius), never O(corpus). prev_cluster_id
-    # (null for new docs) is the delete key an Iceberg MERGE INTO would use.
-    assignments_delta = commit(
-        "assignments_delta", build_assignments_delta, ("dup_pairs", "prepared")
+
+def run_dedup_incremental(
+    spark: SparkSession,
+    new_pages: DataFrame,
+    cfg: DedupConfig = DEFAULT_CONFIG,
+    base_workdir: str | None = None,
+    workdir: str | None = None,
+    resume: bool = True,
+    base_tables: dict[str, DataFrame] | None = None,
+    materialize_assignments: bool = True,
+) -> DedupResult:
+    """Dedup an append batch against a completed base run.
+
+    ``base_workdir``: snapshot dir of the base :func:`run_dedup` run
+    (read-only here); every committed stage of :data:`BASE_STAGES` is read
+    with its manifest schema. Alternatively ``base_tables`` supplies the
+    same dict directly ({"prepared", "features", "assignments"} required,
+    the rest optional) — the streaming wrapper uses this to present a
+    UNION of per-batch generation tables without ever rewriting them.
+    ``workdir``: snapshot dir for this increment's own stages. Returns a
+    :class:`DedupResult` whose ``assignments`` / ``clusters`` cover the
+    COMBINED corpus (base + batch) and whose ``dup_pairs`` /
+    ``review_pairs`` carry only the new evidence.
+
+    ``materialize_assignments``: when True (default, the one-shot append
+    workflow) the combined assignments/clusters tables are committed to
+    ``workdir`` like every other stage. When False (the streaming
+    wrapper) only the O(touched-clusters) ``assignments_delta`` stage is
+    written; the returned combined tables are lazy views over
+    base ∪ delta, and the per-generation write volume is bounded by the
+    batch's blast radius instead of the corpus.
+    """
+    check_tiers_compose(cfg)
+    if base_tables is None:
+        if base_workdir is None:
+            raise ValueError(
+                "run_dedup_incremental requires base_workdir or base_tables"
+            )
+        base_store = StageStore(spark, base_workdir, context=run_context(cfg))
+        for required in ("prepared", "features", "assignments"):
+            if not base_store.exists(required):
+                raise ValueError(
+                    f"base run at {base_workdir} lacks committed stage "
+                    f"'{required}' (or was produced under a different config)"
+                )
+        base_tables = {
+            name: base_store.read(name)
+            for name in BASE_STAGES
+            if base_store.exists(name)
+        }
+    has = {name for name, df in base_tables.items() if df is not None}
+    if cfg.capture_dedup and not {"captures", "dup_pairs"} <= has:
+        raise ValueError(
+            "capture_dedup in incremental mode needs the base run's "
+            "'captures' and 'dup_pairs' snapshots (a capture_dedup=True "
+            "run_dedup with a workdir commits both); the supplied base "
+            "lacks them"
+        )
+    if cfg.span_dedup and not {
+        "extracted", "chunk_counts", "chunk_docs", "dup_pairs"
+    } <= has:
+        raise ValueError(
+            "span_dedup in incremental mode needs the base run's "
+            "'extracted', 'chunk_counts', 'chunk_docs' and 'dup_pairs' "
+            "snapshots — the span tier's storage switch (a "
+            "span_dedup=True run_dedup with a workdir commits all four; "
+            "see docs/ICEBERG.md §6.2); the supplied base lacks them"
+        )
+    check_base_features_schema(base_tables["features"])
+    if "keys" not in has:
+        # pre-"keys"-stage base (or hand-assembled base_tables): derive the
+        # key table once from the base features — the one path that still
+        # re-explodes the base; committed bases never take it.
+        base_tables = {
+            **base_tables,
+            "keys": explode_keys(
+                base_tables["features"].select("doc_uid", "lang", "keys"), cfg
+            ),
+        }
+
+    store = (
+        StageStore(
+            spark, workdir, context={**run_context(cfg), "base": base_workdir}
+        )
+        if workdir
+        else None
     )
-
-    if materialize_assignments:
-        assignments = commit(
-            "assignments",
-            lambda: fold_assignments_delta(base_assign, assignments_delta),
-            ("assignments_delta",),
-        )
-        clusters = commit(
-            "clusters", lambda: cluster_table(assignments), ("assignments",)
-        )
-    else:
-        assignments = fold_assignments_delta(
-            base_assign, assignments_delta
-        ).localCheckpoint(eager=False)
-        clusters = cluster_table(assignments).localCheckpoint(eager=False)
-
-    return DedupResult(
-        docs=docs,
-        quarantine=quarantine,
-        dup_pairs=dup_pairs,
-        review_pairs=review_pairs,
-        assignments=assignments,
-        clusters=clusters,
-        store=store,
+    new_pages, base = _tier_prelude(
+        new_pages, cfg, base_tables, _committer(store, resume, append=True)
+    )
+    return _run_stages(
+        spark, new_pages, cfg, store, resume, base, materialize_assignments
     )

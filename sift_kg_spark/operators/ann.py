@@ -34,7 +34,7 @@ Scale guards (round-1 advice):
   mega-bucket never funnels through one task). Every query still
   receives ~cap candidates per hot bucket while no bucket can emit a
   quadratic pair load. Dense-region recall degrades gracefully and
-  deterministically; the drop is logged by ``ann_bucket_histogram``.
+  deterministically. Nothing records how many members the cap drops.
 
 Probability a pair with angle theta shares >= 1 of b bands of r bits:
 1 - (1 - (1 - theta/pi)^r)^b.
@@ -344,31 +344,6 @@ def ann_ivf_topk(
         .distinct()
     )
     return _cosine_rerank(cand, sig, k)
-
-
-def ann_bucket_histogram(
-    embeddings: DataFrame,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    n_planes: int = 128,
-    bits_per_band: int = 16,
-    seed: int = 42,
-) -> DataFrame:
-    """Skew diagnostic: log2 bucket-size histogram of the band exchange
-    (mirrors operators/lsh.bucket_size_histogram for the text path)."""
-    keys_udf = make_hyperplane_udf(dim, n_planes, bits_per_band, seed)
-    exploded = embeddings.select(
-        F.col(id_col).alias("vid"), keys_udf(F.col(vec_col)).alias("bkeys")
-    ).select("vid", F.posexplode("bkeys").alias("band_id", "band_key"))
-    return (
-        exploded.groupBy("band_id", "band_key")
-        .count()
-        .withColumn("log2_size", F.floor(F.log2("count")))
-        .groupBy("log2_size")
-        .agg(F.count("*").alias("n_buckets"), F.sum("count").alias("n_vids"))
-        .orderBy("log2_size")
-    )
 
 
 def semantic_dedup(

@@ -31,15 +31,23 @@ arrows are DataFrame transformations, shuffles marked):
 
 Decision semantics per stage are documented in the operator modules; this
 module wires them together and owns checkpoint/resume ordering. The stage
-builders shared with the append path (incremental.py) are defined here
-once: ``featurize``, ``span_scores``, ``scored_pairs``, ``with_canonical``
-and ``cluster_table``.
+list above is wired once, in ``_run_stages``, and runs in two modes:
+
+- a full run (``run_dedup``): no base; clustering is global connected
+  components plus the A1 canonical;
+- an append (``incremental.run_dedup_incremental``, which every stream
+  generation also runs): ``pages`` is the batch, each stage's ``base``
+  arm adds the base-side rows or probes, the keys table is always
+  committed, and clustering is by contraction
+  (``incremental.build_assignments_delta``) into an ``assignments_delta``
+  folded onto the base assignments.
 """
 
 from __future__ import annotations
 
-from dataclasses import asdict, dataclass
+from dataclasses import asdict, dataclass, replace
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -191,8 +199,6 @@ def prepare_stage(
         # quarantine checks below then run on the CLEANED text, so a doc
         # that was pure boilerplate lands in near_empty quarantine —
         # C4's post-dedup length floor).
-        from pyspark import StorageLevel
-
         from sift_kg_spark.operators.linededup import (
             boilerplate_chunks,
             chunk_segments,
@@ -279,8 +285,6 @@ def prepare_stage(
         # hygiene pass, run on the EXTRACTED text (pre-normalization).
         # The benchmark is static state (never corpus-derived), so this
         # join rides along unchanged in incremental/streaming batches.
-        from pyspark import StorageLevel
-
         from sift_kg_spark.operators.decontam import decontaminate
 
         bench = docs.sparkSession.read.parquet(
@@ -521,129 +525,295 @@ def cluster_table(assignments: DataFrame) -> DataFrame:
     )
 
 
-def run_dedup(
-    spark: SparkSession,
-    pages: DataFrame,
-    cfg: DedupConfig = DEFAULT_CONFIG,
-    workdir: str | None = None,
-    resume: bool = True,
-) -> DedupResult:
-    store = (
-        StageStore(spark, workdir, context=run_context(cfg)) if workdir else None
-    )
+@dataclass
+class BaseViews:
+    """An append's base, as the base arms of ``_run_stages`` read it.
+    ``prepared``, ``features`` and ``keys`` exclude the docs the tier
+    prelude (``incremental._tier_prelude``) tombstoned (``features`` and
+    ``keys`` with the re-homed rows added); ``pairs`` is the base pair
+    evidence (None when the base has none to offer); ``tombstones`` and
+    ``rewrite_map`` are None when no corpus-stateful tier runs."""
+
+    prepared: DataFrame
+    features: DataFrame
+    keys: DataFrame
+    assignments: DataFrame
+    pairs: DataFrame | None
+    tombstones: DataFrame | None
+    rewrite_map: DataFrame | None
+
+
+def _committer(store: StageStore | None, resume: bool, append: bool):
+    """The commit of every stage of every mode, tier prelude included:
+    ``store.stage`` with a workdir, otherwise an in-memory pin (a lazy
+    ``localCheckpoint`` for an append, ``persist`` for a full run)."""
 
     def commit(name: str, build, inputs: tuple[str, ...] = ()) -> DataFrame:
-        if store is None:
-            # No snapshot dir: cache instead, so multi-consumer stages
-            # (docs, features, dup_pairs feed 2+ downstream stages) are
-            # computed once per run, not once per downstream action.
-            # Serialized level: the feature stage's shingle arrays cached
-            # deserialized exceed executor memory past ~500k docs and
-            # thrash; production runs should pass a workdir (per-stage
-            # snapshots free memory stage by stage).
-            from pyspark import StorageLevel
+        if store is not None:
+            return store.stage(name, build, inputs=inputs, resume=resume)
+        if append:
+            # localCheckpoint (lazy), not bare persist: the increment's
+            # stages reference base/batch subtrees many times over
+            # (broadcast uid/key/url sets), and without per-stage PLAN
+            # truncation Catalyst re-analyzes the exponentially nested
+            # lineage on every downstream Dataset build — minutes of
+            # driver time before any job runs. Blocks are stored
+            # MEMORY_AND_DISK either way; a workdir store gets the same
+            # truncation from its parquet round-trip.
+            return build().localCheckpoint(eager=False)
+        # No snapshot dir: cache instead, so multi-consumer stages (docs,
+        # features, dup_pairs feed 2+ downstream stages) are computed
+        # once per run, not once per downstream action. Serialized level:
+        # the feature stage's shingle arrays cached deserialized exceed
+        # executor memory past ~500k docs and thrash; production runs
+        # should pass a workdir (per-stage snapshots free memory stage by
+        # stage).
+        return build().persist(StorageLevel.MEMORY_AND_DISK)
 
-            return build().persist(StorageLevel.MEMORY_AND_DISK)
-        return store.stage(name, build, inputs=inputs, resume=resume)
+    return commit
 
-    n_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    prepared = commit(
-        "prepared",
-        lambda: prepare_stage(
-            pages, cfg, n_partitions, store=store, resume=resume
-        ),
-        ("pages",),
+
+def _pair_rows(base_rows: DataFrame, pairs: DataFrame) -> DataFrame:
+    """The rows of ``base_rows`` whose ``doc_uid`` a pair of ``pairs(uid_a,
+    uid_b)`` names: a narrow base scan against the broadcast (batch-scale)
+    uid set, never a base-side shuffle."""
+    uids = (
+        pairs.select(F.col("uid_a").alias("doc_uid"))
+        .unionByName(pairs.select(F.col("uid_b").alias("doc_uid")))
+        .distinct()
     )
+    return base_rows.join(F.broadcast(uids), "doc_uid", "leftsemi")
+
+
+def _global_assignments(
+    dup_pairs: DataFrame, docs: DataFrame, cfg: DedupConfig
+) -> DataFrame:
+    """A full run's clustering: connected components over every
+    confirmed edge, singletons for the rest, then the A1 canonical."""
+    edges = dup_pairs.filter(F.col("status") == "confirmed").select(
+        "url_a", "url_b"
+    )
+    cc = connected_components(edges, cfg.max_cc_iterations)
+    assigned = docs.select("url", "n_chars").join(cc, "url", "left")
+    return with_canonical(
+        assigned.withColumn(
+            "cluster_id", F.coalesce(F.col("cluster_id"), F.col("url"))
+        )
+    )
+
+
+def _run_stages(
+    spark: SparkSession,
+    pages: DataFrame,
+    cfg: DedupConfig,
+    store: StageStore | None,
+    resume: bool,
+    base: BaseViews | None = None,
+    materialize_assignments: bool = True,
+) -> DedupResult:
+    """Build and commit the stage list.
+
+    ``base`` is None for a full run. For an append it holds the base
+    views the tier prelude left, ``pages`` is the effective batch, and
+    each ``base`` arm below adds base-side rows or probes to the full-run
+    expression. ``materialize_assignments`` (append only): commit the
+    combined assignments and clusters, not just the delta.
+
+    Trace contract: ``dedupbench/trace.py`` traces a full run by
+    wrapping names this function reaches at call time, so every commit
+    goes through ``StageStore.stage(name, build, inputs=..., resume=...)``,
+    ``exact_representatives`` and ``connected_components`` are looked up
+    as this module's globals while a stage is built, and no Spark job
+    group is set here: callers count a call's jobs by their own group.
+    """
+    # incremental imports this module, so the append's operators are
+    # imported at call time
+    from sift_kg_spark import incremental
+
+    commit = _committer(store, resume, append=base is not None)
+    n_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    group_cols = ["sha", "lang"] if cfg.partition_by_lang else ["sha"]
+
+    def build_prepared() -> DataFrame:
+        # an append's span tier already cleaned the batch against the
+        # merged vocabulary (tier prelude): batch-local re-cleaning would
+        # diverge from the full-run contract
+        prep_cfg = cfg if base is None else replace(cfg, span_dedup=False)
+        prepared = prepare_stage(
+            pages, prep_cfg, n_partitions, store=store, resume=resume
+        )
+        if base is None:
+            return prepared
+        return incremental.batch_prepared(prepared, base.prepared, cfg)
+
+    prepared = commit("prepared", build_prepared, ("pages",))
     if cfg.capture_dedup and "warc_ts" in pages.columns and store is not None:
         # Capture snapshot: (canonical_url, url, warc_ts) of every
         # surviving winner — the state an APPEND batch compares its own
-        # captures against (incremental.py supersede logic). Derived
-        # directly from the raw pages (one max_by groupBy; a real
+        # captures against (the tier prelude commits an append's own).
+        # Derived directly from the raw pages (one max_by groupBy; a real
         # deployment shares the winner computation with prepare_stage at
         # the Iceberg seam instead of re-aggregating).
         from sift_kg_spark.functions.urls import canonicalize, latest_captures
 
-        store.stage(
+        commit(
             "captures",
             lambda: canonicalize(latest_captures(pages)).select(
                 "canonical_url", "url", "warc_ts"
             ),
-            inputs=("pages",),
-            resume=resume,
+            ("pages",),
         )
     docs = prepared.filter(F.col("reason").isNull()).drop("reason")
     quarantine = prepared.filter(F.col("reason").isNotNull()).select(
         "url", "lang", "reason"
     )
+    if base is not None:
+        base_docs = base.prepared.filter(F.col("reason").isNull())
 
-    exact_pairs = commit(
-        "exact_pairs", lambda: exact_dup_pairs(docs, cfg), ("prepared",)
-    )
-
-    features = commit(
-        "features",
-        lambda: featurize(exact_representatives(docs, cfg), cfg),
-        ("prepared",),
-    )
-
-    if store is not None:
-        # The exploded key table is committed as its own snapshot so an
-        # APPEND batch (incremental.py) can semi-join it by key instead of
-        # re-reading + re-exploding the whole base feature table per batch
-        # — the difference between O(corpus) and O(batch) increments. At
-        # the Iceberg seam this table would be bucketed by `key`; here the
-        # parquet snapshot still spares the increment the explode and the
-        # wide `keys` array scan. In-memory runs (store=None) skip the
-        # materialization: nothing will ever append to them.
-        keys = store.stage(
-            "keys", lambda: explode_keys(features, cfg), inputs=("features",),
-            resume=resume,
+    def build_exact() -> DataFrame:
+        pairs = exact_dup_pairs(docs, cfg)
+        if base is None:
+            return pairs
+        # cross-base attachment: a batch doc whose group has base docs
+        # pairs with the group's min base url
+        new_shas = docs.select(*group_cols).distinct()
+        base_reps = (
+            base_docs.join(F.broadcast(new_shas), on=group_cols, how="leftsemi")
+            .groupBy(*group_cols)
+            .agg(F.min("url").alias("rep_url"))
         )
-        candidates = commit(
-            "candidates", lambda: candidate_pairs(keys, cfg), ("keys",)
+        cross = (
+            docs.select("url", *group_cols)
+            .join(F.broadcast(base_reps), on=group_cols, how="inner")
+            .select(
+                F.col("url").alias("url_a"),
+                F.col("rep_url").alias("url_b"),
+                F.lit("exact").alias("channel"),
+                F.lit(1.0).alias("jaccard"),
+            )
         )
+        return pairs.unionByName(cross)
+
+    exact_pairs = commit("exact_pairs", build_exact, ("prepared",))
+
+    def build_features() -> DataFrame:
+        reps_of = docs
+        if base is not None:
+            # One representative per NEW distinct sha — "seen in base"
+            # means a NON-quarantined base row carries it: a sha whose
+            # only base occurrences were quarantined has no base
+            # signature and no base cluster to attach to, so the new doc
+            # must be featured itself (full-run parity for the
+            # raw-short/normalized-same edge case). Base shas
+            # intersecting the batch are found narrowly (broadcast
+            # batch-sha set), then anti-joined back — the base sha column
+            # is scanned once, never shuffled.
+            batch_shas = docs.select(*group_cols).distinct()
+            base_sha_hits = (
+                base_docs.select(*group_cols)
+                .join(F.broadcast(batch_shas), on=group_cols, how="leftsemi")
+                .distinct()
+            )
+            reps_of = docs.join(
+                F.broadcast(base_sha_hits), on=group_cols, how="leftanti"
+            )
+        return featurize(exact_representatives(reps_of, cfg), cfg)
+
+    features = commit("features", build_features, ("prepared",))
+
+    if store is None and base is None:
+        # An in-memory full run keeps the key table a plan: nothing will
+        # ever append to it.
+        keys = explode_keys(features, cfg)
     else:
-        candidates = commit(
-            "candidates",
-            lambda: candidate_pairs(explode_keys(features, cfg), cfg),
-            ("features",),
+        # The exploded key table is committed as its own snapshot so an
+        # APPEND batch (and each later stream generation) can semi-join
+        # it by key instead of re-reading + re-exploding the whole base
+        # feature table per batch — the difference between O(corpus) and
+        # O(batch) increments. At the Iceberg seam this table would be
+        # bucketed by `key`.
+        keys = commit(
+            "keys", lambda: explode_keys(features, cfg), ("features",)
         )
 
-    verified = commit(
-        "verified",
-        lambda: verify_pairs(candidates, features, cfg),
-        ("candidates", "features"),
-    )
-    spans = commit(
-        "spans",
-        lambda: span_scores(
-            verified, docs.select("doc_uid", "text_norm"), cfg, n_partitions
-        ),
-        ("verified", "prepared"),
-    )
+    def build_candidates() -> DataFrame:
+        if base is None:
+            return candidate_pairs(keys, cfg)
+        # only the buckets a batch key touches
+        return incremental.incremental_candidates(keys, base.keys, cfg)
+
+    candidates = commit("candidates", build_candidates, ("keys",))
+
+    # verify + spans + naming: an append's base-side lookups are pruned
+    # to the uids its pairs name
+    def build_verified() -> DataFrame:
+        feats = features
+        if base is not None:
+            cols = ["doc_uid", "shingles", "simhash"]
+            feats = features.select(*cols).unionByName(
+                _pair_rows(base.features.select(*cols), candidates)
+            )
+        return verify_pairs(candidates, feats, cfg)
+
+    verified = commit("verified", build_verified, ("candidates", "features"))
+
+    def build_spans() -> DataFrame:
+        texts = docs.select("doc_uid", "text_norm")
+        if base is not None:
+            flagged = verified.filter(F.col("status") == "flagged")
+            texts = texts.unionByName(
+                _pair_rows(base_docs.select("doc_uid", "text_norm"), flagged)
+            )
+        return span_scores(verified, texts, cfg, n_partitions)
+
+    spans = commit("spans", build_spans, ("verified", "prepared"))
+
+    def build_pairs() -> DataFrame:
+        urls = docs.select("doc_uid", "url")
+        if base is not None:
+            urls = urls.unionByName(
+                _pair_rows(base.prepared.select("doc_uid", "url"), verified)
+            )
+        pairs = scored_pairs(verified, spans, exact_pairs, urls, cfg)
+        if base is not None and base.rewrite_map is not None:
+            pairs = pairs.unionByName(
+                incremental.rewritten_evidence(base.pairs, base.rewrite_map)
+            )
+        return pairs
+
     dup_pairs = commit(
-        "dup_pairs",
-        lambda: scored_pairs(
-            verified, spans, exact_pairs, docs.select("doc_uid", "url"), cfg
-        ),
-        ("verified", "spans", "exact_pairs"),
+        "dup_pairs", build_pairs, ("verified", "spans", "exact_pairs")
     )
     review_pairs = dup_pairs.filter(F.col("status") == "flagged")
 
-    def build_assignments() -> DataFrame:
-        edges = dup_pairs.filter(F.col("status") == "confirmed").select(
-            "url_a", "url_b"
+    keep = commit
+    if base is None:
+        assignments = commit(
+            "assignments",
+            lambda: _global_assignments(dup_pairs, docs, cfg),
+            ("dup_pairs", "prepared"),
         )
-        cc = connected_components(edges, cfg.max_cc_iterations)
-        assigned = docs.select("url", "n_chars").join(cc, "url", "left")
-        return with_canonical(
-            assigned.withColumn(
-                "cluster_id", F.coalesce(F.col("cluster_id"), F.col("url"))
-            )
+    else:
+        # The per-generation WRITE: every member of every touched cluster
+        # plus all new docs — O(batch blast radius), never O(corpus).
+        # prev_cluster_id (null for new docs) is the delete key an
+        # Iceberg MERGE INTO would use.
+        delta = commit(
+            "assignments_delta",
+            lambda: incremental.build_assignments_delta(
+                dup_pairs, docs, base, cfg
+            ),
+            ("dup_pairs", "prepared"),
         )
-
-    assignments = commit("assignments", build_assignments, ("dup_pairs", "prepared"))
-    clusters = commit(
+        if not materialize_assignments:
+            # the stream keeps the combined tables in memory
+            keep = _committer(None, resume, append=True)
+        assignments = keep(
+            "assignments",
+            lambda: incremental.fold_assignments_delta(base.assignments, delta),
+            ("assignments_delta",),
+        )
+    clusters = keep(
         "clusters", lambda: cluster_table(assignments), ("assignments",)
     )
 
@@ -656,3 +826,16 @@ def run_dedup(
         clusters=clusters,
         store=store,
     )
+
+
+def run_dedup(
+    spark: SparkSession,
+    pages: DataFrame,
+    cfg: DedupConfig = DEFAULT_CONFIG,
+    workdir: str | None = None,
+    resume: bool = True,
+) -> DedupResult:
+    store = (
+        StageStore(spark, workdir, context=run_context(cfg)) if workdir else None
+    )
+    return _run_stages(spark, pages, cfg, store, resume)

@@ -175,18 +175,56 @@ def test_incremental_hot_buckets_match_full_run(spark, tmp_path_factory):
         spark, spark.createDataFrame(base_pdf), hot_cfg,
         workdir=str(wd / "base"),
     )
-    inc = run_dedup_incremental(
-        spark,
-        spark.createDataFrame(batch_pdf),
-        hot_cfg,
-        base_workdir=str(wd / "base"),
-        workdir=str(wd / "incr"),
-    )
-    got = _assignments_map(inc.assignments)
     want = _assignments_map(full.assignments)
-    assert set(got) == set(want)
-    mism = {u: (got[u], want[u]) for u in want if got[u] != want[u]}
-    assert not mism, f"{len(mism)} mismatches, e.g. {list(mism.items())[:3]}"
+    # with and without a workdir: an in-memory append pins its stages with
+    # localCheckpoint instead of committing them
+    for incr_workdir in (str(wd / "incr"), None):
+        inc = run_dedup_incremental(
+            spark,
+            spark.createDataFrame(batch_pdf),
+            hot_cfg,
+            base_workdir=str(wd / "base"),
+            workdir=incr_workdir,
+        )
+        got = _assignments_map(inc.assignments)
+        assert set(got) == set(want)
+        mism = {u: (got[u], want[u]) for u in want if got[u] != want[u]}
+        assert not mism, (
+            f"workdir={incr_workdir}: {len(mism)} mismatches, "
+            f"e.g. {list(mism.items())[:3]}"
+        )
+
+
+def test_incremental_resume_rebuilds_nothing(spark, cfg, tmp_path_factory):
+    """An append re-run on its own committed workdir reads every stage
+    back: with an EMPTY batch it returns the same assignments, and its
+    store commits no stage."""
+    from sift_kg_spark.fixtures import generate_corpus
+
+    pages_pdf = generate_corpus(120, seed=9)[0].drop(columns=["true_text"])
+    base_pdf = pages_pdf.iloc[::2].reset_index(drop=True)
+    batch = spark.createDataFrame(pages_pdf.iloc[1::2].reset_index(drop=True))
+    wd = tmp_path_factory.mktemp("inc_resume")
+    run_dedup(
+        spark, spark.createDataFrame(base_pdf), cfg, workdir=str(wd / "base")
+    )
+
+    def append(pages):
+        return run_dedup_incremental(
+            spark, pages, cfg, base_workdir=str(wd / "base"),
+            workdir=str(wd / "incr"), resume=True,
+        )
+
+    first = append(batch)
+    expected = _assignments_map(first.assignments)
+    resumed = append(batch.limit(0))
+    assert _assignments_map(resumed.assignments) == expected
+    lineage = resumed.store.lineage()
+    assert {"prepared", "candidates", "assignments_delta", "clusters"} <= {
+        r.stage for r in lineage.collect()
+    }
+    rebuilt = lineage.filter(F.col("run_id") == resumed.store.run_id)
+    assert [r.stage for r in rebuilt.collect()] == []
 
 
 def test_incremental_candidates_skip_base_features(
